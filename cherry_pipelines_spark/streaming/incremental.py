@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +59,10 @@ def follow(
     while idle < max_polls:
         tip = source_tip(spark)
         ran = pipeline.run(spark, from_block=from_block, to_block=tip, batch_size=batch_size)
+        # the sink checkpoint is the anchor table's max block, which
+        # stays behind the tip when the newest blocks hold no anchor
+        # row; without this the next poll re-runs that range forever
+        from_block = max(from_block, tip + 1)
         total += ran
         if ran == 0:
             idle += 1
@@ -102,7 +106,7 @@ class StreamingPipeline:
             session = batch_df.sparkSession
             bundle: TableBundle = {self.stream_table: batch_df}
             for name, spec in self.static.items():
-                df = session.read.parquet(spec.path)
+                df = spec.load(session)
                 if spec.predicate is not None:
                     df = df.filter(spec.predicate)
                 if spec.columns is not None:
@@ -127,11 +131,21 @@ class StreamingPipeline:
         (``Trigger.AvailableNow`` — the batch-parity mode).  Calling it
         again later processes only newly-arrived files: offsets live in
         ``checkpoint_dir``."""
-        static_schema = spark.read.parquet(self.stream_path).schema
-        reader = spark.readStream.schema(static_schema)
+        # the stream table's format/options/schema come from its spec,
+        # read at the stream directory (the spec's own path is the
+        # batch source's)
+        spec = replace(
+            self.stream_spec or TableSpec(self.stream_path, block_column=""),
+            path=self.stream_path,
+        )
+        reader = (
+            spark.readStream.format(spec.format)
+            .options(**spec.options)
+            .schema(spec.load(spark).schema)
+        )
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        stream = reader.parquet(self.stream_path)
+        stream = reader.load(self.stream_path)
         if self.stream_spec is not None:
             if self.stream_spec.predicate is not None:
                 stream = stream.filter(self.stream_spec.predicate)

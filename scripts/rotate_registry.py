@@ -3,16 +3,19 @@ first-50 CORRECTNESS snapshot accumulates coverage across rounds.
 
 Reads every ``CORRECTNESS_r*.json`` in the repo root, computes the set
 of queries that have EVER had a green driver row — and the round each
-was LAST green — and rewrites the ``_QUERIES`` / ``_ORACLES`` dict
-literals as: never-snapshotted keys first (relative order preserved),
-then ``--front`` rewrites, then every already-checked query sorted
-least-recently-checked first (the LRU sweep: the window's leftover
-slots refresh the stalest driver rows, so every query gets a fresh
-row within ~#queries/50 rounds instead of aging indefinitely).
+was LAST green — and rewrites the ``_REGISTRY`` table literal (one
+row per query: function + oracle) as: never-snapshotted keys first
+(relative order preserved), then ``--front`` rewrites, then every
+already-checked query sorted least-recently-checked first (the LRU
+sweep: the window's leftover slots refresh the stalest driver rows, so
+every query gets a fresh row within ~#queries/50 rounds instead of
+aging indefinitely).
 Comment lines attached above an entry move with it.  Run AFTER a
 round's snapshot lands and BEFORE adding new queries; new queries
 should be inserted at the front so they are checked in their first
-round.
+round.  A rotation changes the ``queries()`` key order, so re-stamp
+the key-order digest in ``tests/test_registry_contract.py`` afterwards
+(its failure message prints the new value).
 
 Usage: python scripts/rotate_registry.py [--dry-run] [--front a,b,c]
 
@@ -32,7 +35,7 @@ import sys
 
 # ROTATE_ROOT / ROTATE_ENTRY_PATH exist for the test harness only
 # (tests/test_rotate_registry.py rewrites a miniature fixture instead
-# of the real 6,700-line registry)
+# of the real registry)
 ROOT = os.environ.get(
     "ROTATE_ROOT",
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -101,16 +104,10 @@ def main() -> int:
             if isinstance(row, dict) and row.get("hash_match"):
                 last_green[name] = max(rnd, last_green.get(name, 0))
     ever_checked = set(last_green)
-    qe, qorder, qfull, qtrail = parse_dict(src, "_QUERIES")
-    oe, oorder, ofull, otrail = parse_dict(src, "_ORACLES")
-    # guard (round-5 advice): an _ORACLES key absent from _QUERIES would
-    # be silently deleted by the keyed rebuild below — refuse instead.
-    stray = set(oorder) - set(qorder)
-    if stray:
-        raise SystemExit(f"_ORACLES keys missing from _QUERIES: {sorted(stray)}")
+    qe, qorder, qfull, qtrail = parse_dict(src, "_REGISTRY")
     bad_front = [k for k in front if k not in qorder]
     if bad_front:
-        raise SystemExit(f"--front names not in _QUERIES: {bad_front}")
+        raise SystemExit(f"--front names not in _REGISTRY: {bad_front}")
     unchecked = [k for k in qorder if k not in ever_checked]
     fronted = [k for k in front if k in ever_checked and k not in unchecked]
     # LRU sweep: stalest driver row first; position in qorder tiebreaks
@@ -133,20 +130,17 @@ def main() -> int:
     if dry:
         return 0
 
-    def rebuild(entries, header, trailing):
-        lines = [header.split("\n")[0]]
-        for k in new_order:
-            if k in entries:
-                lines.extend(entries[k])
-        lines.extend(trailing)
-        lines.append("}")
-        return "\n".join(lines)
-
-    out = src.replace(qfull, rebuild(qe, qfull, qtrail)).replace(
-        ofull, rebuild(oe, ofull, otrail)
+    lines = [qfull.split("\n")[0]]
+    for k in new_order:
+        lines.extend(qe[k])
+    lines.extend(qtrail)
+    lines.append("}")
+    open(ENTRY, "w").write(src.replace(qfull, "\n".join(lines)))
+    print(
+        "rewritten; re-stamp the key-order digest in "
+        "tests/test_registry_contract.py and re-run scripts/check_entry.py "
+        "before committing"
     )
-    open(ENTRY, "w").write(out)
-    print("rewritten; re-run scripts/check_entry.py before committing")
     return 0
 
 

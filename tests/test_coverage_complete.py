@@ -75,8 +75,8 @@ def test_doc_registry_counts_are_stamped_and_current():
 
 
 def test_oracle_keys_match_query_keys():
-    """ADVICE round-5: rotate_registry silently drops _ORACLES entries
-    whose key is missing from _QUERIES; pin the invariant here too."""
+    """Every oracle belongs to a registered query (structural now that
+    one ``_REGISTRY`` row holds both; kept as a guard)."""
     import sys
 
     sys.path.insert(0, _ROOT)

@@ -12,10 +12,12 @@ from pyspark.sql import functions as F
 from cherry_pipelines_spark import registry
 from cherry_pipelines_spark.pipelines import dims
 from cherry_pipelines_spark.pipelines.evm import erc20_transfers as erc20
+from cherry_pipelines_spark.pipelines.svm import orca_swaps as orca
 from cherry_pipelines_spark.sinks.jdbc import JdbcSink
 from cherry_pipelines_spark.sinks.parquet import ParquetSink
 from cherry_pipelines_spark.streaming import StreamingPipeline, follow
 from tests.fixtures_gen import gen_evm_fixtures
+from tests.svm_fixtures_gen import Gen, key
 
 
 @pytest.fixture(scope="module")
@@ -112,6 +114,45 @@ def test_follow_tail(spark, evm_paths, tmp_path_factory):
     follow(pipe, spark, source_tip=lambda s: pipe.source.tip(s),
            from_block=0, batch_size=25, poll_interval_s=0.01, max_polls=1)
     assert pipe.sink.read_table(spark, erc20.TABLE_NAME).count() == cnt
+
+
+def test_follow_returns_when_newest_slots_hold_no_swap(spark, tmp_path):
+    """The sink checkpoint is the anchor table's max slot: when the
+    newest slots hold no orca swap it stays behind the tip, so follow
+    must advance past the tip it ran to or it never goes idle.  The tip
+    probe fails the test on its seventh call instead of hanging."""
+    n_slots, tail = 40, 5
+    gen = Gen(n_slots)
+    gen.build()
+    for slot in range(n_slots + 1, n_slots + tail + 1):  # raydium swaps only
+        gen.blocks.append((slot, slot + 1000, 1_700_000_000 + slot * 2))
+        gen.add_raydium_tx(slot, 0, kind="amm_base_in")
+        gen.transactions.append((slot, 0, key(5_000_000 + slot * 10)))
+    paths = gen.write(str(tmp_path / "svm"))
+    pipe = orca.build_pipeline(
+        paths["instructions"], paths["transactions"], paths["blocks"],
+        paths["token_balances"], str(tmp_path / "sink"),
+    )
+
+    def run_follow():
+        polls = []
+
+        def tip(s):
+            polls.append(1)
+            assert len(polls) <= 6, "follow never went idle"
+            return pipe.source.tip(s)
+
+        return follow(pipe, spark, source_tip=tip, from_block=0,
+                      batch_size=100, poll_interval_s=0.01, max_polls=2)
+
+    assert pipe.source.tip(spark) == n_slots + tail
+    assert run_follow() == 1
+    out = pipe.sink.read_table(spark, orca.TABLE_NAME)
+    n_rows = out.count()
+    assert n_rows == len(gen.gold_orca) > 0
+    assert out.agg(F.max("block_slot")).collect()[0][0] <= n_slots
+    run_follow()
+    assert pipe.sink.read_table(spark, orca.TABLE_NAME).count() == n_rows
 
 
 def test_jdbc_sink_gated(spark):

@@ -1,9 +1,9 @@
 """The registry-rotation script rewrites ``__spark_entry__``'s
-``_QUERIES`` / ``_ORACLES`` dict literals in place — a parsing bug
-would corrupt the driver contract silently.  Pin the rewrite on a
-miniature fixture: never-checked keys lead, ``--front`` rewrites come
-next, comments stay attached to their entries, both dicts stay in the
-same order, unknown flags and unknown --front names are hard errors."""
+``_REGISTRY`` table literal in place — a parsing bug would corrupt the
+driver contract silently.  Pin the rewrite on a miniature fixture:
+never-checked keys lead, ``--front`` rewrites come next, comments stay
+attached to their entries, each row keeps its function and oracle
+together, unknown flags and unknown --front names are hard errors."""
 
 from __future__ import annotations
 
@@ -13,20 +13,13 @@ import subprocess
 import sys
 
 MINI_ENTRY = '''
-_QUERIES: dict[str, object] = {
-    "alpha": 1,
+_REGISTRY: dict[str, tuple[int, str]] = {
+    "alpha": (1, "A"),
     # beta's comment rides with beta
-    "beta": 2,
-    "gamma": 3,
-    "delta": 4,
+    "beta": (2, "B"),
+    "gamma": (3, "C"),
+    "delta": (4, "D"),
     # trailing comment survives
-}
-
-_ORACLES: dict[str, str] = {
-    "alpha": "A",
-    "beta": "B",
-    "gamma": "C",
-    "delta": "D",
 }
 '''
 
@@ -52,11 +45,11 @@ def _setup(tmp_path, checked):
     (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(rows))
 
 
-def _order(tmp_path, name):
+def _order(tmp_path):
     src = (tmp_path / "__spark_entry__.py").read_text()
     import re
 
-    m = re.search(rf"{name}[^=]*= \{{\n(.*?)\n\}}", src, re.S)
+    m = re.search(r"_REGISTRY[^=]*= \{\n(.*?)\n\}", src, re.S)
     return re.findall(r'^\s*"([a-z]+)":', m.group(1), re.M)
 
 
@@ -64,8 +57,7 @@ def test_never_checked_lead_then_fronted(tmp_path):
     _setup(tmp_path, checked=["alpha", "beta", "gamma"])  # delta pending
     r = _run(tmp_path, ["--front", "gamma"])
     assert r.returncode == 0, r.stderr
-    assert _order(tmp_path, "_QUERIES") == ["delta", "gamma", "alpha", "beta"]
-    assert _order(tmp_path, "_ORACLES") == ["delta", "gamma", "alpha", "beta"]
+    assert _order(tmp_path) == ["delta", "gamma", "alpha", "beta"]
     src = (tmp_path / "__spark_entry__.py").read_text()
     # comments stayed attached / survived
     assert "beta's comment rides with beta" in src
@@ -76,8 +68,8 @@ def test_never_checked_lead_then_fronted(tmp_path):
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    assert list(mod._QUERIES) == ["delta", "gamma", "alpha", "beta"]
-    assert mod._ORACLES["gamma"] == "C"
+    assert list(mod._REGISTRY) == ["delta", "gamma", "alpha", "beta"]
+    assert mod._REGISTRY["gamma"] == (3, "C")
 
 
 def test_dry_run_touches_nothing(tmp_path):
@@ -110,5 +102,4 @@ def test_lru_sweep_orders_stalest_checked_first(tmp_path):
     assert r.returncode == 0, r.stderr
     # delta never checked -> leads; beta stalest (r01); alpha/gamma (r02)
     # keep original relative order as the tiebreak
-    assert _order(tmp_path, "_QUERIES") == ["delta", "beta", "alpha", "gamma"]
-    assert _order(tmp_path, "_ORACLES") == ["delta", "beta", "alpha", "gamma"]
+    assert _order(tmp_path) == ["delta", "beta", "alpha", "gamma"]
