@@ -8427,8 +8427,9 @@ def q_ivf_pq_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 20% batch in FOUR separate sub-batches (``vec_id % 20`` in
     {4, 9, 14, 19} — same union as the append row's single batch), so
     touched cell dirs hold base + up to 4 append files; then
-    ``compact_stored_index`` coalesces each cell dir behind an atomic
-    rename, and the probe runs over the COMPACTED index.  The query
+    ``compact_stored_index`` rewrites every cell dir in one write and
+    swaps each in behind two atomic renames, and the probe runs over
+    the COMPACTED index.  The query
     RAISES if compaction didn't actually rewrite anything, so a
     silently no-op compactor cannot pass.
 

@@ -17,9 +17,10 @@ class that CAN be maintained without re-reading history.
 Scale shape: the stored state has one row per group (small by
 construction); each apply shuffles the batch's partials once on the
 group key, joins nothing, and rewrites the state atomically (write to
-temp dir + two renames via the Hadoop FS API, same crash contract as
-``sinks/compact.py``).  The batch side pre-aggregates map-side, so the
-shuffle carries |groups-in-batch| rows, not |batch| rows.
+temp dir + two renames via the Hadoop FS API, the ``sinks/swap.py``
+crash contract that ``sinks/compact.py`` and ``sinks/upsert.py``
+share).  The batch side pre-aggregates map-side, so the shuffle
+carries |groups-in-batch| rows, not |batch| rows.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cherry_pipelines_spark.sinks.swap import DirSwap
+
 _MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 _PARTIAL = {
     "sum": lambda c: F.sum(c),
@@ -36,8 +39,6 @@ _PARTIAL = {
     "min": lambda c: F.min(c),
     "max": lambda c: F.max(c),
 }
-_TMP_SUFFIX = "._rollup_tmp"
-_OLD_SUFFIX = "._rollup_old"
 
 
 class IncrementalRollup:
@@ -75,29 +76,16 @@ class IncrementalRollup:
 
     # ---------------------------------------------------------- state io
 
-    def _fs_paths(self):
-        jvm = self.spark._jvm
-        dst = jvm.org.apache.hadoop.fs.Path(self.path)
-        tmp = jvm.org.apache.hadoop.fs.Path(self.path + _TMP_SUFFIX)
-        old = jvm.org.apache.hadoop.fs.Path(self.path + _OLD_SUFFIX)
-        fs = dst.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, dst, tmp, old
-
-    def _recover(self) -> None:
-        """Crash recovery: the commit protocol renames dst→old then
-        tmp→dst; a crash between the two leaves no dst but an intact
-        ``old``.  Roll BACK by restoring old→dst (the interrupted
-        apply() never returned, so the caller re-applies its batch —
-        rolling forward the tmp would double-count it on retry).
-        Never deletes old/tmp while dst is absent."""
-        fs, dst, _tmp, old = self._fs_paths()
-        if not fs.exists(dst) and fs.exists(old):
-            fs.rename(old, dst)
+    def _swap(self) -> DirSwap:
+        return DirSwap(self.spark, self.path, "rollup")
 
     def _exists(self) -> bool:
-        self._recover()
-        fs, dst, _tmp, _old = self._fs_paths()
-        return bool(fs.exists(dst))
+        """Crash recovery: a crash between the commit's two renames
+        leaves no dst but an intact ``old``.  Roll BACK by restoring it
+        (the interrupted apply() never returned, so the caller
+        re-applies its batch — rolling the tmp forward would
+        double-count it on retry)."""
+        return self._swap().recover()
 
     def read(self) -> DataFrame:
         """Current rollup state (empty-state and crash safe)."""
@@ -136,25 +124,10 @@ class IncrementalRollup:
             )
         else:
             merged = part
-        self._swap_in(merged)
-        return self.read()
-
-    def _swap_in(self, state: DataFrame) -> None:
-        jvm = self.spark._jvm
-        dst = jvm.org.apache.hadoop.fs.Path(self.path)
-        tmp = jvm.org.apache.hadoop.fs.Path(self.path + _TMP_SUFFIX)
-        old = jvm.org.apache.hadoop.fs.Path(self.path + _OLD_SUFFIX)
-        fs = dst.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
-        if fs.exists(old):
-            fs.delete(old, True)
-        # state reads the CURRENT dir lazily — materialize to tmp first,
+        swap = self._swap()
+        swap.recover()
+        # merged reads the CURRENT dir lazily — materialize to tmp first,
         # then two renames (old layout or new layout, never half)
-        state.write.mode("overwrite").parquet(str(tmp))
-        had_prev = fs.exists(dst)
-        if had_prev:
-            fs.rename(dst, old)
-        fs.rename(tmp, dst)
-        if had_prev:
-            fs.delete(old, True)
+        merged.write.mode("overwrite").parquet(swap.tmp)
+        swap.commit()
+        return self.read()

@@ -1833,11 +1833,11 @@ def compact_stored_index(
     cheap because a separate maintenance pass restores the layout.
 
     Delegates to :func:`cherry_pipelines_spark.sinks.compact.
-    compact_partitions` — per-cell coalesce to
-    ``ceil(bytes / target_file_bytes)`` files, rewritten into a
-    sibling temp dir and swapped in with two atomic renames, so
-    concurrent readers on rename-atomic filesystems see either the
-    old or the new layout, never a half-written cell.  Compaction
+    compact_partitions` — every over-fragmented cell rewritten to at
+    most ``ceil(bytes / target_file_bytes)`` files by ONE write into a
+    hidden staging dir, then each cell swapped in with two atomic
+    renames, so concurrent readers on rename-atomic filesystems see
+    either the old or the new layout, never a half-written cell.  Compaction
     rewrites FILES only: cell membership, codes, and therefore probe
     results are bit-identical (pinned in tests/test_pq.py), and the
     DPP gate's ``numFiles < staticFilesNum`` only tightens (both
@@ -1868,11 +1868,13 @@ def retrain_stored_ivfpq_trained_index(
     re-auto-size to the grown n under ``n_cells=None``), every row
     re-encoded, and readers never see a half-built index.
 
-    Swap protocol (same two-rename pattern as
+    Swap protocol (``sinks/swap.DirSwap``, shared with
     ``sinks/compact.compact_partitions``): build into a sibling
     ``._retrain_tmp`` dir, rename live → ``._retrain_old``, rename tmp
     → live, delete old.  A crash leaves the old layout, a stale tmp
-    (cleaned on the next run), or the new layout — never a torn index.
+    (cleaned on the next run), the live index parked as
+    ``._retrain_old`` (restored on the next run), or the new layout —
+    never a torn index.
     On rename-atomic filesystems (local/HDFS) concurrent probes keep a
     consistent view; on S3 schedule against a quiescent index.
 
@@ -1883,25 +1885,14 @@ def retrain_stored_ivfpq_trained_index(
     append path's frozen-metadata contract exists to avoid).
     ``build_kwargs`` pass through to
     :func:`build_stored_ivfpq_trained_index`."""
-    from cherry_pipelines_spark.sinks.compact import _fs_for
+    from cherry_pipelines_spark.sinks.swap import DirSwap
 
-    jvm, fs, live = _fs_for(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmp = Path(path + "._retrain_tmp")
-    old = Path(path + "._retrain_old")
-    for stale in (tmp, old):
-        if fs.exists(stale):
-            fs.delete(stale, True)  # leftover from a crashed retrain
+    swap = DirSwap(spark, path, "retrain")
+    swap.recover()  # debris of a crashed retrain; restores a parked index
     codebooks, cents = build_stored_ivfpq_trained_index(
-        df, tmp.toString(), **build_kwargs
+        df, swap.tmp, **build_kwargs
     )
-    if fs.exists(live) and not fs.rename(live, old):
-        raise IOError(f"retrain swap-out failed for {path}")
-    if not fs.rename(tmp, live):
-        if fs.exists(old):
-            fs.rename(old, live)  # roll back
-        raise IOError(f"retrain swap-in failed for {path}")
-    fs.delete(old, True)
+    swap.commit()
     return codebooks, cents
 
 

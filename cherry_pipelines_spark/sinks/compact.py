@@ -13,48 +13,47 @@ Partition values (and therefore replay granularity and the checkpoint
 watermark) are preserved — only the file layout inside each partition
 changes.
 
-Job shape (round-14): partitions whose target is ONE file — the
-overwhelmingly common case, and all of a fresh append swamp — are
-rewritten by a SINGLE Spark job: one multi-directory scan (partition
-columns recovered via ``basePath``), one hash exchange on the
-partition keys (each partition's rows land wholly in one task), one
-dynamic-``partitionBy`` write into a hidden staging dir under the
-table root, then per-partition atomic rename swaps.  The previous
-shape issued one read→coalesce→write job PER partition (threaded), so
-a 16-cell index compaction was 32 driver-sequenced jobs of ~0.15 s
-scheduling latency each — at a million-partition table that job chain,
-not the data, is the cost (guide §2.4/§6).  Partitions that need
-MULTIPLE output files (bytes > target) keep the per-partition
-coalesce path — their rewrite is data-bound, not latency-bound.
+Job shape: every partition that needs rewriting, whatever its target
+file count, goes through ONE Spark write.  One multi-directory scan
+reads them with an explicit schema: the data columns merged across
+every footer (a column only some partitions carry survives), plus the
+partition keys typed as strings, so ``007`` or ``2024-01-01`` come back
+as the same dir names without touching session conf.  One hash
+exchange on ``(keys…, salt)`` feeds one dynamic-``partitionBy`` write
+into a hidden staging dir under the table root.  The salt is
+``pmod(xxhash64(data cols), n_target)``: 0 for a one-file partition,
+up to ``n_target`` buckets for a larger one, and a function of the row
+alone, so a retried task rebuilds the same buckets.  The exchange has
+an explicit partition count, which AQE never coalesces, so each
+partition ends with between 1 and ``n_target`` files.  The job chain
+per call is constant: at a million-partition table one job per
+partition (~0.15 s scheduling latency each), not the data, would be
+the cost (guide §2.4/§6).
 
-Portability: listing, sizing, and the atomic directory swap go through
-the Hadoop FileSystem API (works on local fs, HDFS, S3A — wherever the
-table lives), not ``os`` calls.  Each partition is rewritten into a
-staging dir and swapped in with two renames, so a crash leaves either
-the old layout, a stale temp dir (cleaned on the next run), or the new
-layout — never a half-written partition in place.
+Portability: listing and sizing go through the Hadoop FileSystem API
+(works on local fs, HDFS, S3A — wherever the table lives), not ``os``
+calls.  Each rewritten partition is swapped in from the staging dir by
+:class:`~cherry_pipelines_spark.sinks.swap.DirSwap` (two renames), so a
+crash leaves either the old layout, a stale temp dir, a partition
+parked under its ``._compact_old`` name (restored on the next run), or
+the new layout — never a half-written partition in place.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType, StringType, StructField, StructType
 
-_TMP_SUFFIX = "._compact_tmp"
-_OLD_SUFFIX = "._compact_old"
-# hidden (leading dot ⇒ invisible to parquet readers) single-job
-# staging dir under the table root; ends with _TMP_SUFFIX so a crashed
-# run's leftover is swept by the next run's walk like any stale temp
-_BULK_STAGING = ".bulk" + _TMP_SUFFIX
+from cherry_pipelines_spark.sinks.swap import DirSwap, fs_for
 
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
+_TAG = "compact"
+# Spark's dir-name spelling of a NULL partition value
+_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -73,18 +72,90 @@ def _parquet_files(fs, d):
     ]
 
 
-def _swap_in(fs, Path, part_dir, new_dir) -> None:
-    """Atomically replace ``part_dir``'s contents with ``new_dir`` via
-    the two-rename protocol (old layout | stale temp | new layout —
-    never a torn partition)."""
-    part_str = part_dir.toString()
-    old = Path(part_str + _OLD_SUFFIX)
-    if not fs.rename(part_dir, old):
-        raise IOError(f"compaction swap failed for {part_str}")
-    if not fs.rename(new_dir, part_dir):
-        fs.rename(old, part_dir)  # roll back
-        raise IOError(f"compaction swap-in failed for {part_str}")
-    fs.delete(old, True)
+def _subdirs(fs, d):
+    return [st.getPath() for st in fs.listStatus(d) if st.isDirectory()]
+
+
+def _leaf_dirs(spark: SparkSession, fs, root) -> list:
+    """Walk down NESTED key=value partition chains (e.g. the lattice
+    index's c0=…/c1=… two-level layout) to the LEAF dirs — the ones
+    that actually hold parquet files.  A single-level layout's dirs are
+    their own leaves.  A crashed run's ``._compact_tmp`` /
+    ``._compact_old`` dirs are recovered on the way: a partition parked
+    between its two renames is restored, the rest dropped."""
+    leaves = []
+    stack = [(root, True)]
+    while stack:
+        d, is_root = stack.pop()
+        subdirs = _subdirs(fs, d)
+        stale = {DirSwap.live_name(p.getName(), _TAG) for p in subdirs} - {None}
+        for live in stale:
+            DirSwap(spark, f"{d.toString()}/{live}", _TAG).recover()
+        if stale:
+            subdirs = _subdirs(fs, d)
+        kv = [p for p in subdirs if "=" in p.getName()]
+        stack.extend((p, False) for p in kv)
+        if not is_root and not kv:
+            leaves.append(d)
+    return leaves
+
+
+def _part_values(rel: str) -> tuple:
+    """Partition values of a ``k1=v1/k2=v2`` path, as the string-typed
+    read returns them (Spark percent-escapes dir names)."""
+    vals = (seg.split("=", 1)[1] for seg in rel.split("/"))
+    return tuple(None if v == _NULL_PART else unquote(v) for v in vals)
+
+
+def _rewrite(spark: SparkSession, root_str: str, keys: tuple, dirs: dict,
+             target_file_bytes: int) -> dict[str, int]:
+    """Rewrite ``dirs`` (rel path → (size, n_target), all on the
+    partition-key chain ``keys``) with one write and swap each one in.
+    Returns the files written per dir; 0 for a dir whose files hold no
+    rows, which is left as it is."""
+    jvm, fs, _root = fs_for(spark, root_str)
+    paths = [f"{root_str}/{rel}" for rel in dirs]
+    merged = (
+        spark.read.option("basePath", root_str).option("mergeSchema", "true")
+        .parquet(*paths).schema
+    )
+    data = [f for f in merged.fields if f.name not in keys]
+    schema = StructType(data + [StructField(k, StringType()) for k in keys])
+    df = spark.read.schema(schema).option("basePath", root_str).parquet(*paths)
+
+    # n_target is looked up only for the dirs that need several files;
+    # every other dir gets salt 0, i.e. one bucket, one file
+    salt = F.lit(0)
+    hashed = [f.name for f in data if isinstance(f.dataType, AtomicType)]
+    lookup = []
+    for rel, (_size, n_target) in dirs.items():
+        if n_target > 1:
+            vals = zip(keys, _part_values(rel))
+            lookup += [F.struct(*[F.lit(v).cast("string").alias(k) for k, v in vals]),
+                       F.lit(n_target)]
+    if lookup and hashed:
+        n_salt = F.coalesce(F.create_map(*lookup)[F.struct(*keys)], F.lit(1))
+        salt = F.pmod(F.xxhash64(*hashed), n_salt)
+
+    # an explicit count keeps AQE from merging a dir's salt buckets: one
+    # task per output group at most, at least the session's shuffle
+    # width or one task per target-sized slice of the input
+    groups = sum(n for _size, n in dirs.values())
+    size = sum(size for size, _n in dirs.values())
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = min(groups, max(width, math.ceil(size / target_file_bytes)))
+
+    # a staging dir has no live side, so recover() just drops it
+    staging = DirSwap(spark, root_str + "/.bulk", _TAG)
+    df.repartition(n_parts, *keys, salt).write.partitionBy(*keys).parquet(staging.tmp)
+    written = {}
+    for rel in dirs:
+        new = jvm.org.apache.hadoop.fs.Path(f"{staging.tmp}/{rel}")
+        written[rel] = len(_parquet_files(fs, new)) if fs.exists(new) else 0
+        if written[rel]:
+            DirSwap(spark, f"{root_str}/{rel}", _TAG).commit(new.toString())
+    staging.recover()
+    return written
 
 
 def compact_partitions(
@@ -103,143 +174,36 @@ def compact_partitions(
     atomic rename (local/HDFS; on S3 schedule it against a quiescent
     table).
     """
-    jvm, fs, root = _fs_for(spark, table_path)
-    Path = jvm.org.apache.hadoop.fs.Path
+    _jvm, fs, root = fs_for(spark, table_path)
     if not fs.exists(root):
         return CompactionReport(0, 0, 0, 0)
+    leaf_dirs = _leaf_dirs(spark, fs, root)
 
-    # Walk down NESTED key=value partition chains (e.g. the lattice
-    # index's c0=…/c1=… two-level layout) and compact the LEAF dirs —
-    # the ones that actually hold parquet files.  A single-level
-    # layout's dirs are their own leaves, so the flat behavior is
-    # unchanged.
-    leaf_dirs = []
-    stack = [(root, True)]
-    while stack:
-        d, is_root = stack.pop()
-        has_kv_child = False
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if not st.isDirectory():
-                continue
-            if name.endswith(_TMP_SUFFIX) or name.endswith(_OLD_SUFFIX):
-                fs.delete(st.getPath(), True)  # leftover from a crashed run
-                continue
-            if "=" not in name:
-                continue
-            has_kv_child = True
-            stack.append((st.getPath(), False))
-        if not is_root and not has_kv_child:
-            leaf_dirs.append(d)
-
-    seen = len(leaf_dirs)
-    compacted = files_before_total = files_after_total = 0
-
-    # Size every leaf ONCE on the driver and split the rewrites:
-    #   bulk      — target is 1 file: rewritten together in ONE job
-    #   per_dir   — target > 1 file: per-partition coalesce (data-bound)
-    # leaf paths from listStatus come back fully qualified
-    # (``file:/…``); qualify root the same way so rel-path slicing and
-    # staging-path construction line up on any filesystem
+    # Size every leaf ONCE on the driver and group the ones to rewrite
+    # by partition-key chain (one write each; a table has one chain).
+    # Leaf paths from listStatus come back fully qualified (``file:/…``);
+    # qualify root the same way so rel-path slicing and staging-path
+    # construction line up on any filesystem.
     root_str = fs.makeQualified(root).toString().rstrip("/")
-    bulk: list[tuple] = []  # (part_dir, rel_path, part_keys, n_files)
-    per_dir: list[tuple] = []  # (part_dir, n_files, n_target)
+    files_before = files_after = compacted = 0
+    n_files: dict[str, int] = {}
+    chains: dict[tuple, dict] = {}
     for d in leaf_dirs:
         files = _parquet_files(fs, d)
-        n_files = len(files)
         size = sum(f.getLen() for f in files)
         n_target = max(1, math.ceil(size / target_file_bytes))
-        if n_files < min_files or n_files <= n_target:
-            files_before_total += n_files
-            files_after_total += n_files
+        files_before += len(files)
+        if len(files) < min_files or len(files) <= n_target:
+            files_after += len(files)
             continue
-        if n_target == 1:
-            rel = d.toString()[len(root_str) :].strip("/")
-            keys = [seg.split("=", 1)[0] for seg in rel.split("/")]
-            bulk.append((d, rel, tuple(keys), n_files))
-        else:
-            per_dir.append((d, n_files, n_target))
+        rel = d.toString()[len(root_str) :].strip("/")
+        keys = tuple(seg.split("=", 1)[0] for seg in rel.split("/"))
+        chains.setdefault(keys, {})[rel] = (size, n_target)
+        n_files[rel] = len(files)
 
-    # all bulk dirs must agree on the partition-key chain for one
-    # partitionBy write; stragglers (shouldn't happen in practice)
-    # take the per-dir path
-    if bulk:
-        key_seq = bulk[0][2]
-        mismatched = [b for b in bulk if b[2] != key_seq]
-        bulk = [b for b in bulk if b[2] == key_seq]
-        per_dir.extend((b[0], b[3], 1) for b in mismatched)
-
-    if bulk:
-        staging = Path(root_str + "/" + _BULK_STAGING)
-        if fs.exists(staging):
-            fs.delete(staging, True)
-        key_seq = bulk[0][2]
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        infer_prev = spark.conf.get(infer_key, "true")
-        # partition values as VERBATIM strings: inference-off makes the
-        # read→partitionBy round trip reproduce every dir name exactly
-        # (no int/date re-formatting ambiguity)
-        spark.conf.set(infer_key, "false")
-        try:
-            df = (
-                spark.read.option("basePath", root_str)
-                .parquet(*[b[0].toString() for b in bulk])
-            )
-            # one exchange on the partition keys: each partition's rows
-            # land wholly in one task ⇒ exactly one output file per dir
-            (
-                df.repartition(*[k for k in key_seq])
-                .write.partitionBy(*key_seq)
-                .parquet(staging.toString())
-            )
-        finally:
-            spark.conf.set(infer_key, infer_prev)
-        for d, rel, _keys, n_files in bulk:
-            new_dir = Path(staging.toString() + "/" + rel)
-            if not fs.exists(new_dir):
-                # no rows materialized for this dir (e.g. all-empty
-                # files) — leave it for the per-dir path
-                per_dir.append((d, n_files, 1))
-                continue
-            written = len(_parquet_files(fs, new_dir))
-            _swap_in(fs, Path, d, new_dir)
-            files_before_total += n_files
-            files_after_total += written
-            compacted += 1
-        fs.delete(staging, True)
-
-    # Partition rewrites needing multiple output files are independent
-    # (each swaps behind its own rename pair), so they run CONCURRENTLY
-    # from a thread pool: each rewrite is a read→coalesce→write Spark
-    # job whose wall time at small sizes is dominated by per-job
-    # scheduling latency; overlapping them keeps the scheduler busy and
-    # bounds the wall time near the slowest single partition.  Crash
-    # semantics are unchanged — per-partition atomicity never depended
-    # on ordering.
-    def _compact_one(entry) -> tuple[int, int]:
-        part_dir, n_files, n_target = entry
-        # rewrite this partition at the target file count: coalesce is
-        # a NARROW merge (no shuffle — guide §2.4); the scan plans at
-        # most one partition per file, so coalesce(n_target) always
-        # reaches the target when it matters (n_files > n_target)
-        part_str = part_dir.toString()
-        tmp = Path(part_str + _TMP_SUFFIX)
-        (
-            spark.read.parquet(part_str)
-            .coalesce(n_target)
-            .write.mode("overwrite")
-            .parquet(tmp.toString())
-        )
-        written = len(_parquet_files(fs, tmp))
-        _swap_in(fs, Path, part_dir, tmp)
-        return n_files, written
-
-    if per_dir:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(per_dir))) as pool:
-            for before_n, after_n in pool.map(_compact_one, per_dir):
-                files_before_total += before_n
-                files_after_total += after_n
-                compacted += 1
-    return CompactionReport(seen, compacted, files_before_total, files_after_total)
+    for keys, dirs in chains.items():
+        written = _rewrite(spark, root_str, keys, dirs, target_file_bytes)
+        for rel, n_new in written.items():
+            files_after += n_new or n_files[rel]
+            compacted += n_new > 0
+    return CompactionReport(len(leaf_dirs), compacted, files_before, files_after)

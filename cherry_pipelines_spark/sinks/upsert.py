@@ -13,16 +13,17 @@ key, the one with the highest version.
 
 Scale shape: ONE shuffle — the union of (stored ∪ batch) aggregates by
 key with a ``max_by`` struct pick (map-side partial applies); no join,
-no window sort.  The rewrite goes through the same crash-safe two-rename
-swap as ``engine/rollup.py`` (write tmp → dst→old → tmp→dst → drop
-old), with the same roll-back recovery: a crash between the renames is
-healed by restoring ``old`` on the next call, and the interrupted batch
-re-applies idempotently (same keys + versions → same table).
+no window sort.  The rewrite goes through the crash-safe two-rename
+swap of ``sinks/swap.py`` (write tmp → dst→old → tmp→dst → drop old),
+whose roll-back recovery heals a crash between the renames by restoring
+``old`` on the next call; the interrupted batch re-applies idempotently
+(same keys + versions → same table).
 
 At 100 TB one would partition the table and rewrite only partitions the
-batch touches (the ``compact_partitions`` per-partition machinery);
-this operator keeps the single-table form — the merge PLAN is the part
-that carries over unchanged.
+batch touches (the ``compact_partitions`` shape: one write into a
+staging dir, then one swap per touched partition); this operator keeps
+the single-table form — the merge PLAN is the part that carries over
+unchanged.
 """
 
 from __future__ import annotations
@@ -32,8 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_TMP_SUFFIX = "._upsert_tmp"
-_OLD_SUFFIX = "._upsert_old"
+from cherry_pipelines_spark.sinks.swap import DirSwap
 
 
 class UpsertTable:
@@ -52,23 +52,11 @@ class UpsertTable:
         self.version_col = version_col
 
     # ------------------------------------------------------------ state
-    def _fs_paths(self):
-        jvm = self.spark._jvm
-        dst = jvm.org.apache.hadoop.fs.Path(self.path)
-        tmp = jvm.org.apache.hadoop.fs.Path(self.path + _TMP_SUFFIX)
-        old = jvm.org.apache.hadoop.fs.Path(self.path + _OLD_SUFFIX)
-        fs = dst.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, dst, tmp, old
-
-    def _recover(self) -> None:
-        fs, dst, _tmp, old = self._fs_paths()
-        if not fs.exists(dst) and fs.exists(old):
-            fs.rename(old, dst)
+    def _swap(self) -> DirSwap:
+        return DirSwap(self.spark, self.path, "upsert")
 
     def exists(self) -> bool:
-        self._recover()
-        fs, dst, _tmp, _old = self._fs_paths()
-        return bool(fs.exists(dst))
+        return self._swap().recover()
 
     def read(self) -> DataFrame:
         if not self.exists():
@@ -102,17 +90,8 @@ class UpsertTable:
     def apply(self, batch: DataFrame) -> DataFrame:
         """Merge one batch in; returns the new table state."""
         merged = self._merged(batch)
-        fs, dst, tmp, old = self._fs_paths()
-        self._recover()
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
-        merged.write.mode("overwrite").parquet(str(tmp))
-        had_prev = fs.exists(dst)
-        if had_prev:
-            if fs.exists(old):
-                fs.delete(old, True)
-            fs.rename(dst, old)
-        fs.rename(tmp, dst)
-        if had_prev:
-            fs.delete(old, True)
+        swap = self._swap()
+        swap.recover()
+        merged.write.mode("overwrite").parquet(swap.tmp)
+        swap.commit()
         return self.read()
