@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Any
+from typing import Any, Iterable
 
 import numpy as np
 import pandas as pd
@@ -427,6 +427,10 @@ def _trim_sig(sig: "InstructionSignature", drop_params: tuple[str, ...]):
     )
 
 
+def _sql_binary(b: bytes) -> str:
+    return f"X'{bytes(b).hex()}'"
+
+
 def decode_instructions_multi(
     instructions: DataFrame,
     kinds: "list[tuple]",
@@ -463,8 +467,6 @@ def decode_instructions_multi(
     (2.8 s -> 0.7 s for raydium's 10 branches, identical rows).  Drop
     and NULL semantics are bit-identical per kind — pinned by the
     differential pytest."""
-    from pyspark.sql import functions as F
-
     if not kinds:
         raise ValueError("decode_instructions_multi: kinds must be non-empty")
     if len({k[0] for k in kinds}) != len(kinds):
@@ -482,12 +484,13 @@ def decode_instructions_multi(
     carry = [c for c in passthrough] + [
         c for c in acct_src if c not in passthrough and c in instructions.columns
     ]
-    pred = None
-    for _, progs, sig in norm:
-        p = F.col("program_id").isin([*progs]) & F.col(data_col).startswith(
-            F.lit(sig.discriminator)
-        )
-        pred = p if pred is None else (pred | p)
+    # the dispatch filter as SQL text: parsed in one call, where the
+    # Column form costs several py4j round trips per operator
+    pred = " OR ".join(
+        f"(`program_id` IN ({', '.join(_sql_binary(p) for p in progs)})"
+        f" AND startswith(`{data_col}`, {_sql_binary(sig.discriminator)}))"
+        for _, progs, sig in norm
+    )
     sel = list(carry)
     if "program_id" not in sel:
         sel.append("program_id")
@@ -588,6 +591,30 @@ def decode_instructions_multi(
     return fan_out(pre).mapInPandas(fused, schema)
 
 
+def kind_columns(
+    kind: tuple, names: Iterable[str] | None = None
+) -> list[tuple[str, str]]:
+    """``(name, SQL expression)`` of each account, then each param, of
+    one :func:`decode_instructions_multi` kind over the fused frame
+    (only those in ``names`` when given): the first ten accounts are
+    ``a0..a9``, the rest come out of ``rest_of_accounts``, params are
+    un-prefixed.  SQL text, not Columns, so a projection over many kinds
+    is parsed in one call rather than built one py4j round trip per
+    operator."""
+    key, sig = kind[0], _trim_sig(kind[2], kind[3] if len(kind) > 3 else ())
+    want = None if names is None else set(names)
+    cols = [
+        (aname, f"`a{i}`" if i < 10 else f"element_at(`rest_of_accounts`, {i - 9})")
+        for i, aname in enumerate(sig.accounts_names)
+        if want is None or aname in want
+    ]
+    return cols + [
+        (p.name, f"`{key}__{p.name}`")
+        for p in sig.params
+        if want is None or p.name in want
+    ]
+
+
 def split_decoded(
     fused: DataFrame,
     kinds: "list[tuple]",
@@ -603,22 +630,10 @@ def split_decoded(
     ``decode_instructions_df`` output.  Cache the fused frame per batch
     BEFORE splitting (``ctx.batch_cache``) or each branch re-executes
     the Python stage."""
-    from pyspark.sql import functions as F
-
-    out: dict[str, DataFrame] = {}
-    for k in kinds:
-        key, sig = k[0], _trim_sig(k[2], k[3] if len(k) > 3 else ())
-        acct_cols = []
-        n_direct = min(len(sig.accounts_names), 10)
-        for i, aname in enumerate(sig.accounts_names[:n_direct]):
-            acct_cols.append(F.col(f"a{i}").alias(aname))
-        for j, aname in enumerate(sig.accounts_names[10:]):
-            acct_cols.append(
-                F.element_at(F.col("rest_of_accounts"), j + 1).alias(aname)
-            )
-        out[key] = fused.filter(F.col("_kind") == key).select(
-            *passthrough,
-            *acct_cols,
-            *[F.col(f"{key}__{p.name}").alias(p.name) for p in sig.params],
+    return {
+        k[0]: fused.filter(f"`_kind` = '{k[0]}'").selectExpr(
+            *[f"`{c}`" for c in passthrough],
+            *[f"{sql} AS `{name}`" for name, sql in kind_columns(k)],
         )
-    return out
+        for k in kinds
+    }

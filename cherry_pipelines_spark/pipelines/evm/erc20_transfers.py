@@ -35,20 +35,15 @@ TABLE_NAME = "erc20_transfers"
 EVENT_SIGNATURE = "Transfer(address indexed from, address indexed to, uint256 amount)"
 TOPIC0 = evm_signature_to_topic0("Transfer(address,address,uint256)")
 
-LOG_FIELDS = (
-    "block_number",
-    "block_hash",
-    "transaction_index",
-    "transaction_hash",
-    "log_index",
-    "address",
-    "topic0",
-    "topic1",
-    "topic2",
-    "topic3",
-    "data",
+# the selected columns with the provider's types, declared as the scan
+# schema: the scan keeps just these columns and no load pays a
+# schema-inference job
+LOG_SCHEMA = (
+    "block_number bigint, block_hash binary, transaction_index bigint, "
+    "transaction_hash binary, log_index bigint, address binary, topic0 binary, "
+    "topic1 binary, topic2 binary, topic3 binary, data binary"
 )
-BLOCK_FIELDS = ("number", "timestamp")
+BLOCK_SCHEMA = "number bigint, timestamp bigint"
 
 
 def _decode_step(bundle, ctx):
@@ -93,10 +88,10 @@ def build_pipeline(
             "logs": TableSpec(
                 path=logs_path,
                 block_column="block_number",
-                columns=LOG_FIELDS,
+                schema=LOG_SCHEMA,
                 predicate=F.col("topic0") == F.lit(TOPIC0),
             ),
-            "blocks": TableSpec(path=blocks_path, block_column="number", columns=BLOCK_FIELDS),
+            "blocks": TableSpec(path=blocks_path, block_column="number", schema=BLOCK_SCHEMA),
         }
     )
     if sink is None:

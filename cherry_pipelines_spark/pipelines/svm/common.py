@@ -10,7 +10,8 @@ the (slot, tx) group, a per-(slot, tx) ``row_number`` produces
 identical join results without the global sort — the global index is
 ``group_base + local_index`` and bases cancel inside a group.  At scale
 that turns an impossible single-partition sort into a hash-partitioned
-window.
+window.  The adjacency lookup is a window over the same groups too
+(``lead`` in :func:`with_adjacent_transfers`), not a join.
 """
 
 from __future__ import annotations
@@ -43,25 +44,26 @@ TOKEN_TRANSFER_CHECKED_SIGNATURE = B.InstructionSignature(
     accounts_names=("source", "mint", "destination", "authority"),
 )
 
-INSTRUCTION_FIELDS = (
-    "block_slot",
-    "block_hash",
-    "transaction_index",
-    "instruction_address",
-    "program_id",
-    *[f"a{i}" for i in range(10)],
-    "rest_of_accounts",
-    "data",
-    "is_committed",
+# decoded beside the swaps for J2 (with_adjacent_transfers)
+_TOKEN_PROGRAMS = (TOKEN_PROGRAM_ID, TOKEN_2022_PROGRAM_ID)
+TRANSFER_KINDS = [
+    ("transfers", _TOKEN_PROGRAMS, TOKEN_TRANSFER_SIGNATURE),
+    ("checked_transfers", _TOKEN_PROGRAMS, TOKEN_TRANSFER_CHECKED_SIGNATURE),
+]
+
+# the selected source columns with the provider's types, declared as
+# the scan schema: no load pays a schema-inference job
+INSTRUCTION_SCHEMA = (
+    "block_slot bigint, block_hash binary, transaction_index bigint, "
+    "instruction_address array<int>, program_id binary, "
+    + "".join(f"a{i} binary, " for i in range(10))
+    + "rest_of_accounts array<binary>, data binary, is_committed boolean"
 )
-TRANSACTION_FIELDS = ("block_slot", "transaction_index", "signature")
-BLOCK_FIELDS = ("slot", "height", "timestamp")
-TOKEN_BALANCE_FIELDS = (
-    "block_slot",
-    "transaction_index",
-    "account",
-    "post_mint",
-    "post_decimals",
+TRANSACTION_SCHEMA = "block_slot bigint, transaction_index bigint, signature binary"
+BLOCK_SCHEMA = "slot bigint, height bigint, timestamp bigint"
+TOKEN_BALANCE_SCHEMA = (
+    "block_slot bigint, transaction_index bigint, account binary, post_mint binary, "
+    "post_decimals int"
 )
 
 DECODE_PASSTHROUGH = (
@@ -80,13 +82,6 @@ def starts_with(col: Column, prefix: bytes) -> Column:
     return col.startswith(F.lit(prefix))
 
 
-def program_in(*program_ids: bytes) -> Column:
-    c = F.col("program_id") == F.lit(program_ids[0])
-    for p in program_ids[1:]:
-        c = c | (F.col("program_id") == F.lit(p))
-    return c
-
-
 def svm_source(
     instructions_path: str,
     transactions_path: str,
@@ -103,21 +98,14 @@ def svm_source(
         pred = pred & instruction_predicate
     tables = {
         "instructions": TableSpec(
-            path=instructions_path,
-            block_column="block_slot",
-            columns=INSTRUCTION_FIELDS,
-            predicate=pred,
+            instructions_path, "block_slot", predicate=pred, schema=INSTRUCTION_SCHEMA
         ),
-        "transactions": TableSpec(
-            path=transactions_path, block_column="block_slot", columns=TRANSACTION_FIELDS
-        ),
-        "blocks": TableSpec(path=blocks_path, block_column="slot", columns=BLOCK_FIELDS),
+        "transactions": TableSpec(transactions_path, "block_slot", schema=TRANSACTION_SCHEMA),
+        "blocks": TableSpec(blocks_path, "slot", schema=BLOCK_SCHEMA),
     }
     if token_balances_path is not None:
         tables["token_balances"] = TableSpec(
-            path=token_balances_path,
-            block_column="block_slot",
-            columns=TOKEN_BALANCE_FIELDS,
+            token_balances_path, "block_slot", schema=TOKEN_BALANCE_SCHEMA
         )
     return ParquetSource(tables)
 
@@ -136,54 +124,61 @@ def indexed_instructions(instructions: DataFrame, keep: Column) -> DataFrame:
     )
 
 
-def prepared_transfers(
-    transfers: DataFrame, checked_transfers: DataFrame, with_vaults: bool = False
-) -> DataFrame:
-    """Decoded transfer + transfer_checked rows stacked to one frame
-    (orca_swaps.py:347-359; raydium keeps destination/source as the
-    vault hints, raydium_swaps.py:516-532)."""
-    cols = ["block_slot", "transaction_index", "amount", "instruction_index"]
-    if with_vaults:
-        cols += ["destination", "source"]
-    return transfers.select(*cols).unionByName(checked_transfers.select(*cols))
+def by_kind(kinds: list[tuple], *names: str) -> str:
+    """SQL for one column over the fused decode: each row takes the
+    first of ``names`` its own kind has, NULL when it has none.  Text,
+    so a whole projection over the fused frame is parsed in one call."""
+    branches = []
+    for k in kinds:
+        cols = dict(B.kind_columns(k, names))
+        name = next((n for n in names if n in cols), None)
+        if name is not None:
+            branches.append(f"WHEN `_kind` = '{k[0]}' THEN {cols[name]}")
+    return f"CASE {' '.join(branches)} END" if branches else "NULL"
 
 
-def join_adjacent_transfers(
-    swaps: DataFrame, transfers: DataFrame, with_vaults: bool = False
-) -> DataFrame:
-    """J2 positional adjacency: input transfer at index+1, output at
-    index+2 (orca_swaps.py:402-436), with found_input/found_output
-    flags; raydium also carries destination→input_vault /
-    source→output_vault (raydium_swaps.py:553-568)."""
-    in_cols = [
-        F.col("block_slot"),
-        F.col("transaction_index"),
-        F.col("amount").alias("input_amount"),
-        F.col("instruction_index").alias("_in_idx"),
-        F.lit(True).alias("found_input"),
-    ]
-    out_cols = [
-        F.col("block_slot"),
-        F.col("transaction_index"),
-        F.col("amount").alias("output_amount"),
-        F.col("instruction_index").alias("_out_idx"),
-        F.lit(True).alias("found_output"),
-    ]
+def kind_in(kinds: list[tuple]) -> str:
+    """SQL test that a fused-decode row is of one of ``kinds``."""
+    return "`_kind` IN (" + ", ".join(f"'{k[0]}'" for k in kinds) + ")"
+
+
+def with_adjacent_transfers(fused: DataFrame, with_vaults: bool = False) -> DataFrame:
+    """J2 positional adjacency, appended to every row of the fused
+    decode: the transfer at ``instruction_index``+1 is a swap's input,
+    the one at +2 its output (orca_swaps.py:402-436), with
+    found_input/found_output flags (TRUE or NULL); raydium also takes
+    destination→input_vault and source→output_vault
+    (raydium_swaps.py:553-568).
+
+    ``lead(1)``/``lead(2)`` in one window by instruction_index within
+    (block_slot, transaction_index), not a self-join.  The kinds are
+    disjoint (no row decodes twice), so a group's indexes increase
+    strictly: the instruction at +1, when decoded, is the next row, and
+    the one at +2 is the next row or the one after."""
+    names = ("amount", "destination", "source")
+    fields = "".join(f", '{n}', {by_kind(TRANSFER_KINDS, n)}" for n in names)
+    transfer = f"named_struct('i', instruction_index{fields})"
+    transfer = f"CASE WHEN {kind_in(TRANSFER_KINDS)} THEN {transfer} END"
+    w = "OVER (PARTITION BY block_slot, transaction_index ORDER BY instruction_index)"
+
+    def at(k: int) -> str:  # the transfer at instruction_index + k, if decoded
+        whens = (f"WHEN _next{j}.i = instruction_index + {k} THEN _next{j}" for j in (1, 2)[:k])
+        return f"(CASE {' '.join(whens)} END)"
+
+    at1, at2 = at(1), at(2)
+    adjacent = {
+        "input_amount": f"{at1}.amount",
+        "found_input": f"CASE WHEN {at1} IS NOT NULL THEN true END",
+        "output_amount": f"{at2}.amount",
+        "found_output": f"CASE WHEN {at2} IS NOT NULL THEN true END",
+    }
     if with_vaults:
-        in_cols.append(F.col("destination").alias("input_vault"))
-        out_cols.append(F.col("source").alias("output_vault"))
-    input_transfers = transfers.select(*in_cols)
-    output_transfers = transfers.select(*out_cols)
-    swaps = swaps.withColumn("_in_idx", F.col("instruction_index") + 1).withColumn(
-        "_out_idx", F.col("instruction_index") + 2
+        adjacent.update(input_vault=f"{at1}.destination", output_vault=f"{at2}.source")
+    return (
+        fused.withColumns({f"_next{j}": F.expr(f"lead({transfer}, {j}) {w}") for j in (1, 2)})
+        .withColumns({k: F.expr(v) for k, v in adjacent.items()})
+        .drop("_next1", "_next2")
     )
-    swaps = swaps.join(
-        input_transfers, on=["block_slot", "transaction_index", "_in_idx"], how="left"
-    )
-    swaps = swaps.join(
-        output_transfers, on=["block_slot", "transaction_index", "_out_idx"], how="left"
-    )
-    return swaps.drop("_in_idx", "_out_idx")
 
 
 def join_vault_mints(swaps: DataFrame, token_balances: DataFrame) -> DataFrame:

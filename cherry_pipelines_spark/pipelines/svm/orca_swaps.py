@@ -5,9 +5,11 @@ direction swap, two-table output with anchor semantics).
 
 Spark-first deviations (semantics preserved):
 * global ``with_row_index`` → per-(slot, tx) ``row_number`` (common.py);
-* the a_to_b two-way filter + rename + vstack (orca_swaps.py:373-400) is
-  a single-pass ``F.when`` role assignment — one scan instead of two,
-  same rows.
+* the v1/v2 union and the a_to_b two-way filter + rename + vstack
+  (orca_swaps.py:291-400) are one projection over the fused decode, with
+  a CASE per column — one pass instead of four, same rows;
+* the index+1/+2 transfer joins are ``lead`` over the same decode
+  (common.with_adjacent_transfers).
 """
 
 from __future__ import annotations
@@ -108,131 +110,82 @@ SIGNATURE_V2 = B.InstructionSignature(
     ),
 )
 
-_COMMON = [
-    "block_slot",
-    "block_hash",
-    "transaction_index",
-    "instruction_address",
-    "program_id",
-    "token_authority",
-    "whirlpool",
-    "amount",
-    "other_amount_threshold",
-    "sqrt_price_limit",
-    "amount_specified_is_input",
-    "a_to_b",
-    "instruction_index",
-]
-
-
-def _normalize_v1(df: DataFrame) -> DataFrame:
-    """v1 → v2-shaped frame with typed-NULL padding (orca_swaps.py:293-317)."""
-    return df.select(
-        *_COMMON,
-        F.lit(None).cast("binary").alias("token_mint_a"),
-        F.lit(None).cast("binary").alias("token_mint_b"),
-        F.col("token_owner_account_a"),
-        F.col("token_vault_a"),
-        F.col("token_owner_account_b"),
-        F.col("token_vault_b"),
-        F.lit(1).cast("int").alias("version"),
-    )
-
-
-def _normalize_v2(df: DataFrame) -> DataFrame:
-    return df.select(
-        *_COMMON,
-        "token_mint_a",
-        "token_mint_b",
-        "token_owner_account_a",
-        "token_vault_a",
-        "token_owner_account_b",
-        "token_vault_b",
-        F.lit(2).cast("int").alias("version"),
-    )
-
-
-def _directional(swaps: DataFrame) -> DataFrame:
-    """Single-pass a_to_b role swap (replaces filter+rename+vstack,
-    orca_swaps.py:373-400): input_* = a-side when a_to_b else b-side."""
-    a2b = F.col("a_to_b")
-
-    def pick(a_col: str, b_col: str):
-        return F.when(a2b, F.col(a_col)).otherwise(F.col(b_col))
-
-    return swaps.select(
-        "block_slot",
-        "block_hash",
-        "transaction_index",
-        "instruction_address",
-        "program_id",
-        "token_authority",
-        "whirlpool",
-        pick("token_owner_account_a", "token_owner_account_b").alias("input_token_account"),
-        pick("token_owner_account_b", "token_owner_account_a").alias("output_token_account"),
-        pick("token_vault_a", "token_vault_b").alias("input_vault"),
-        pick("token_vault_b", "token_vault_a").alias("output_vault"),
-        "amount",
-        "amount_specified_is_input",
-        "other_amount_threshold",
-        "sqrt_price_limit",
-        "a_to_b",
-        "version",
-        "instruction_index",
-    )
-
-
 # fused dispatch spec (orca_swaps.py:223-265): two swap shapes + two
 # transfer shapes through ONE Arrow boundary.  remaining_accounts_info
 # (the one variable-width v2 param) is decoded then dropped by the
 # reference too — skipping it keeps v2 on the vectorized fixed-width
 # fast path (drop_params slot of the kind tuple)
-_MULTI_KINDS = [
+_SWAP_KINDS = [
     ("swaps_v1", (PROGRAM_ID,), SIGNATURE_V1),
     ("swaps_v2", (PROGRAM_ID,), SIGNATURE_V2, ("remaining_accounts_info",)),
-    (
-        "transfers",
-        (C.TOKEN_PROGRAM_ID, C.TOKEN_2022_PROGRAM_ID),
-        C.TOKEN_TRANSFER_SIGNATURE,
-    ),
-    (
-        "checked_transfers",
-        (C.TOKEN_PROGRAM_ID, C.TOKEN_2022_PROGRAM_ID),
-        C.TOKEN_TRANSFER_CHECKED_SIGNATURE,
-    ),
 ]
+_MULTI_KINDS = _SWAP_KINDS + C.TRANSFER_KINDS
+
+
+def _swaps(decoded: DataFrame) -> DataFrame:
+    """v1 and v2 swaps in one projection over the fused decode
+    (orca_swaps.py:291-400): each column comes from the row's own kind,
+    ``version`` tags the kind, and the a_to_b role swap is a single
+    CASE per side (replacing the reference's filter + rename + vstack):
+    input_* = a-side when a_to_b else b-side."""
+
+    def col(name: str) -> str:
+        return C.by_kind(_SWAP_KINDS, name)
+
+    def named(name: str) -> str:
+        return f"{col(name)} AS {name}"
+
+    def pick(a_col: str, b_col: str) -> str:
+        return f"CASE WHEN {col('a_to_b')} THEN {col(a_col)} ELSE {col(b_col)} END"
+
+    return decoded.filter(C.kind_in(_SWAP_KINDS)).selectExpr(
+        "block_slot",
+        "transaction_index",
+        "block_hash",
+        "instruction_address",
+        "program_id",
+        named("token_authority"),
+        named("whirlpool"),
+        pick("token_owner_account_a", "token_owner_account_b") + " AS input_token_account",
+        pick("token_owner_account_b", "token_owner_account_a") + " AS output_token_account",
+        pick("token_vault_a", "token_vault_b") + " AS input_vault",
+        pick("token_vault_b", "token_vault_a") + " AS output_vault",
+        named("amount"),
+        named("amount_specified_is_input"),
+        named("other_amount_threshold"),
+        named("sqrt_price_limit"),
+        named("a_to_b"),
+        "CASE WHEN `_kind` = 'swaps_v1' THEN 1 ELSE 2 END AS version",
+        "instruction_index",
+        "input_amount",
+        "found_input",
+        "output_amount",
+        "found_output",
+    )
 
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
     """Memo-filter → positional index → discriminator dispatch →
     decode, fused into one mapInPandas boundary (see
-    raydium_swaps.decode_step); the decoded union is cached per batch
-    and the four branches are JVM projections over the cache."""
-    from cherry_pipelines_spark.functions.borsh import (
-        decode_instructions_multi,
-        split_decoded,
-    )
+    raydium_swaps.decode_step).  Swaps and transfers stay in the one
+    ``decoded`` frame, which every later step reads in a single pass."""
+    from cherry_pipelines_spark.functions.borsh import decode_instructions_multi
 
     out = dict(bundle)
     ins = C.indexed_instructions(
-        bundle["instructions"],
+        out.pop("instructions"),
         (F.col("program_id") != F.lit(C.MEMO_PROGRAM_ID_V1))
         & (F.col("program_id") != F.lit(C.MEMO_PROGRAM_ID_V2)),
     )
-    fused = ctx.batch_cache(
-        decode_instructions_multi(ins, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH)
+    out["decoded"] = decode_instructions_multi(
+        ins, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH
     )
-    out.update(split_decoded(fused, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH))
-    del out["instructions"]
     return out
 
 
 def process_step(bundle: TableBundle, ctx) -> TableBundle:
     """orca_swaps.py:291-479 re-expressed."""
-    swaps = _normalize_v1(bundle["swaps_v1"]).unionByName(_normalize_v2(bundle["swaps_v2"]))
-    swaps = _directional(swaps)
-    transfers = C.prepared_transfers(bundle["transfers"], bundle["checked_transfers"])
-    swaps = C.join_adjacent_transfers(swaps, transfers)
+    swaps = _swaps(C.with_adjacent_transfers(bundle["decoded"]))
     swaps = C.join_vault_mints(swaps, bundle["token_balances"])
     swaps = C.join_tx_and_blocks(swaps, bundle["transactions"], bundle["blocks"])
     swaps = swaps.drop("instruction_index")

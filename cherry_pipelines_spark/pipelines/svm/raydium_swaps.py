@@ -138,164 +138,95 @@ _KINDS = (
     ("clmm_swaps_v2", CLMM_PROGRAM_ID, SWAP_V2_DISCRIMINATOR, SWAP_V2_SIGNATURE),
 )
 
-def _null(t: str):
-    return F.lit(None).cast(t)
+# swap_kind tag of each kind
+_TAGS = {
+    "amm_base_in_swaps": "amm_base_in",
+    "amm_base_out_swaps": "amm_base_out",
+    "cp_swap_base_input_swaps": "cp_swap_base_input",
+    "cp_swap_base_output_swaps": "cp_swap_base_output",
+    "clmm_swaps_v1": "clmm_v1",
+    "clmm_swaps_v2": "clmm_v2",
+}
+_PARAMS = (
+    "max_amount_in",
+    "amount_out",
+    "amount_in",
+    "minimum_amount_out",
+    "amount",
+    "other_amount_threshold",
+    "sqrt_price_limit_x64",
+    "is_base_input",
+)
 
 
-def _head(payer: str, pool: str, in_acct: str, out_acct: str, kind: str):
-    return [
-        F.col("block_slot"),
-        F.col("block_hash"),
-        F.col("transaction_index"),
-        F.col("instruction_address"),
-        F.col("program_id"),
-        F.col(payer).alias("payer"),
-        F.col(pool).alias("pool"),
-        F.col(in_acct).alias("input_token_account"),
-        F.col(out_acct).alias("output_token_account"),
-        F.lit(kind).alias("swap_kind"),
-    ]
+def _swaps(decoded: DataFrame) -> DataFrame:
+    """The six swap shapes as one frame with the swap_kind tag
+    (raydium_swaps.py:378-514), in one projection over the fused
+    decode: each column comes from the row's own kind (the AMM kinds
+    name payer, pool and token accounts their own way), NULL where the
+    kind has no such param."""
+
+    def col(alias: str, *names: str) -> str:
+        return f"{C.by_kind(_SWAP_KINDS, *(names or (alias,)))} AS {alias}"
+
+    tags = ", ".join(f"'{k}', '{v}'" for k, v in _TAGS.items())
+    return decoded.filter(C.kind_in(_SWAP_KINDS)).selectExpr(
+        "block_slot",
+        "transaction_index",
+        "block_hash",
+        "instruction_address",
+        "program_id",
+        col("payer", "payer", "user_source_owner"),
+        col("pool", "pool_state", "amm"),
+        col("input_token_account", "input_token_account", "user_source_token_account"),
+        col("output_token_account", "output_token_account", "user_destination_token_account"),
+        f"map({tags})[`_kind`] AS swap_kind",
+        *[col(n) for n in _PARAMS],
+        "instruction_index",
+        "input_amount",
+        "found_input",
+        "output_amount",
+        "found_output",
+        "input_vault",
+        "output_vault",
+    )
 
 
-def _tail():
-    return [F.col("instruction_index")]
-
-
-def _normalize(bundle: TableBundle) -> DataFrame:
-    """Typed-NULL pad the six decoded shapes to one schema with the
-    swap_kind tag (raydium_swaps.py:378-514)."""
-    clmm_cols = lambda: [
-        _null("long").alias("max_amount_in"),
-        _null("long").alias("amount_out"),
-        _null("long").alias("amount_in"),
-        _null("long").alias("minimum_amount_out"),
-        F.col("amount"),
-        F.col("other_amount_threshold"),
-        F.col("sqrt_price_limit_x64"),
-        F.col("is_base_input"),
-    ]
-    frames = [
-        bundle["clmm_swaps_v1"].select(
-            *_head("payer", "pool_state", "input_token_account", "output_token_account", "clmm_v1"),
-            *clmm_cols(),
-            *_tail(),
-        ),
-        bundle["clmm_swaps_v2"].select(
-            *_head("payer", "pool_state", "input_token_account", "output_token_account", "clmm_v2"),
-            *clmm_cols(),
-            *_tail(),
-        ),
-        bundle["cp_swap_base_input_swaps"].select(
-            *_head("payer", "pool_state", "input_token_account", "output_token_account", "cp_swap_base_input"),
-            _null("long").alias("max_amount_in"),
-            _null("long").alias("amount_out"),
-            F.col("amount_in"),
-            F.col("minimum_amount_out"),
-            _null("long").alias("amount"),
-            _null("long").alias("other_amount_threshold"),
-            _null("decimal(38,0)").alias("sqrt_price_limit_x64"),
-            _null("boolean").alias("is_base_input"),
-            *_tail(),
-        ),
-        bundle["cp_swap_base_output_swaps"].select(
-            *_head("payer", "pool_state", "input_token_account", "output_token_account", "cp_swap_base_output"),
-            F.col("max_amount_in"),
-            F.col("amount_out"),
-            _null("long").alias("amount_in"),
-            _null("long").alias("minimum_amount_out"),
-            _null("long").alias("amount"),
-            _null("long").alias("other_amount_threshold"),
-            _null("decimal(38,0)").alias("sqrt_price_limit_x64"),
-            _null("boolean").alias("is_base_input"),
-            *_tail(),
-        ),
-        bundle["amm_base_in_swaps"].select(
-            *_head("user_source_owner", "amm", "user_source_token_account", "user_destination_token_account", "amm_base_in"),
-            _null("long").alias("max_amount_in"),
-            _null("long").alias("amount_out"),
-            F.col("amount_in"),
-            F.col("minimum_amount_out"),
-            _null("long").alias("amount"),
-            _null("long").alias("other_amount_threshold"),
-            _null("decimal(38,0)").alias("sqrt_price_limit_x64"),
-            _null("boolean").alias("is_base_input"),
-            *_tail(),
-        ),
-        bundle["amm_base_out_swaps"].select(
-            *_head("user_source_owner", "amm", "user_source_token_account", "user_destination_token_account", "amm_base_out"),
-            F.col("max_amount_in"),
-            F.col("amount_out"),
-            _null("long").alias("amount_in"),
-            _null("long").alias("minimum_amount_out"),
-            _null("long").alias("amount"),
-            _null("long").alias("other_amount_threshold"),
-            _null("decimal(38,0)").alias("sqrt_price_limit_x64"),
-            _null("boolean").alias("is_base_input"),
-            *_tail(),
-        ),
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-# the fused dispatch spec: eight kind branches + two transfer branches,
-# decoded through ONE Arrow boundary (functions/borsh.py:
-# decode_instructions_multi) instead of ten — the round-10 PIPEBENCH
+# the fused dispatch spec: six swap kinds + two transfer kinds decoded
+# through ONE Arrow boundary (functions/borsh.py:
+# decode_instructions_multi) instead of eight — the round-10 PIPEBENCH
 # gap between raydium (44k instr/s, 10 boundaries) and meteora
 # (152k instr/s, 2 boundaries) attributed to exactly this
-_MULTI_KINDS = [
-    (key, (program,), sig) for key, program, _disc, sig in _KINDS
-] + [
-    (
-        "transfers",
-        (C.TOKEN_PROGRAM_ID, C.TOKEN_2022_PROGRAM_ID),
-        C.TOKEN_TRANSFER_SIGNATURE,
-    ),
-    (
-        "checked_transfers",
-        (C.TOKEN_PROGRAM_ID, C.TOKEN_2022_PROGRAM_ID),
-        C.TOKEN_TRANSFER_CHECKED_SIGNATURE,
-    ),
-]
+_SWAP_KINDS = [(key, (program,), sig) for key, program, _disc, sig in _KINDS]
+_MULTI_KINDS = _SWAP_KINDS + C.TRANSFER_KINDS
 
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
-    """raydium_swaps.py:309-374: memo-filter → index → 8-way dispatch →
-    decode, fused: the discriminator dispatch happens INSIDE one
-    mapInPandas batch (per-sub-batch vectorized kernels), the decoded
-    union is cached per batch, and the ten branch frames are pure JVM
-    projections over the cache.  Per-kind results are schema- and
-    value-identical to the per-branch decode_instructions_df chain
-    (pinned by the differential pytest)."""
-    from cherry_pipelines_spark.functions.borsh import (
-        decode_instructions_multi,
-        split_decoded,
-    )
+    """raydium_swaps.py:309-374: memo-filter → index → 6-way swap
+    dispatch + transfers → decode, fused: the discriminator dispatch
+    happens INSIDE one mapInPandas batch (per-sub-batch vectorized
+    kernels), and swaps and transfers stay in the one ``decoded``
+    frame, which every later step reads in a single pass.  Per-kind
+    results are schema- and value-identical to the per-branch
+    decode_instructions_df chain (pinned by the differential pytest)."""
+    from cherry_pipelines_spark.functions.borsh import decode_instructions_multi
 
     out = dict(bundle)
     ins = C.indexed_instructions(
-        bundle["instructions"],
+        out.pop("instructions"),
         (F.col("program_id") != F.lit(C.MEMO_PROGRAM_ID_V1))
         & (F.col("program_id") != F.lit(C.MEMO_PROGRAM_ID_V2)),
     )
-    fused = ctx.batch_cache(
-        decode_instructions_multi(ins, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH)
+    out["decoded"] = decode_instructions_multi(
+        ins, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH
     )
-    out.update(split_decoded(fused, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH))
-    del out["instructions"]
     return out
 
 
 def process_step(bundle: TableBundle, ctx) -> TableBundle:
     """raydium_swaps.py:377-625: vaults come from the adjacent transfers'
     destination/source (unlike orca where they're swap accounts)."""
-    swaps = _normalize(bundle)
-    transfers = C.prepared_transfers(
-        bundle["transfers"], bundle["checked_transfers"], with_vaults=True
-    )
-    swaps = C.join_adjacent_transfers(swaps, transfers, with_vaults=True)
+    swaps = _swaps(C.with_adjacent_transfers(bundle["decoded"], with_vaults=True))
     swaps = C.join_vault_mints(swaps, bundle["token_balances"])
     swaps = C.join_tx_and_blocks(swaps, bundle["transactions"], bundle["blocks"])
     swaps = swaps.drop("instruction_index")

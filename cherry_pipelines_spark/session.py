@@ -97,6 +97,11 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions",
         )
+        # keep the codegen stage id out of generated class names: AQE
+        # numbers stages in the order they materialize, which varies
+        # from run to run, and a renamed class misses the codegen cache
+        # and is compiled (and JIT-warmed) again for every batch
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )

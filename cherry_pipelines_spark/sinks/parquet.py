@@ -74,8 +74,12 @@ class ParquetSink:
         # batch partition it would have landed in under the batch loop,
         # keeping the on-disk layout (and idempotent per-batch replay)
         # identical between the two modes.
-        expr = F.lit(from_block) if batch_expr is None else batch_expr
-        df = df.withColumn(BATCH_COL, expr.cast("long"))
+        # The batch value only names the output dir.  As a string
+        # literal it is a codegen reference, where a long literal is
+        # inlined into the generated code: every batch would compile
+        # its write stage anew.
+        expr = F.lit(str(from_block)) if batch_expr is None else batch_expr.cast("long")
+        df = df.withColumn(BATCH_COL, expr)
         if batch_expr is not None or self.partition_by:
             # cluster rows by their output directory before a multi-dir
             # dynamic-partition write: without this, every write task

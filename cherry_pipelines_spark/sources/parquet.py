@@ -19,6 +19,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from cherry_pipelines_spark.engine.checkpoint import FooterStatsUnavailable, footer_bound
 from cherry_pipelines_spark.engine.step import TableBundle
 
 
@@ -34,9 +35,9 @@ class TableSpec:
 
     ``format``/``options``/``schema`` open the same scan to other file
     formats (csv, json, orc).  Parquet/ORC keep full filter/column
-    pushdown; CSV/JSON get column pruning only — and text formats
-    should declare ``schema`` explicitly, since inference costs an
-    extra pass and is non-deterministic at scale.
+    pushdown; CSV/JSON get column pruning only.  A declared ``schema``
+    skips inference, which costs a Parquet table one Spark job per
+    load and a text table an extra pass (non-deterministic at scale).
     """
 
     path: str
@@ -57,6 +58,20 @@ class TableSpec:
             reader = reader.schema(self.schema)
         return reader.load(self.path)
 
+    def max_block(self, spark: SparkSession) -> int | None:
+        """Max of the block column over the whole table: from Parquet
+        footer statistics (pyarrow, no Spark job) when they can answer
+        (:func:`~cherry_pipelines_spark.engine.checkpoint.footer_bound`),
+        else one Spark aggregate over :meth:`load`."""
+        from pyspark.sql import functions as F
+
+        if self.format == "parquet" and not self.options:
+            try:
+                return footer_bound(self.path, self.block_column, "max")
+            except FooterStatsUnavailable:
+                pass
+        return self.load(spark).agg(F.max(self.block_column)).collect()[0][0]
+
 
 @dataclass
 class ParquetSource:
@@ -65,28 +80,23 @@ class ParquetSource:
     def tip(self, spark: SparkSession) -> int:
         """Max block available across the source tables — the chain-tip
         probe for unbounded runs (reference: dataset metadata REST call,
-        scripts/main.py:192-194).  A stats-only scan under
-        ``parquet.aggregatePushdown``."""
-        from pyspark.sql import functions as F
-
+        scripts/main.py:192-194).  Each table answers from its Parquet
+        footers with no Spark job (:meth:`TableSpec.max_block`)."""
         tip = -1
         for spec in self.tables.values():
-            row = spec.load(spark).agg(F.max(spec.block_column).alias("m")).collect()[0]
-            if row["m"] is not None:
-                tip = max(tip, int(row["m"]))
+            m = spec.max_block(spark)
+            if m is not None:
+                tip = max(tip, int(m))
         return tip
 
     def read(self, spark: SparkSession, from_block: int, to_block: int) -> TableBundle:
-        from pyspark.sql import functions as F
-
         bundle: TableBundle = {}
         for name, spec in self.tables.items():
             df: DataFrame = spec.load(spark)
             if spec.range_filter:
-                df = df.filter(
-                    (F.col(spec.block_column) >= from_block)
-                    & (F.col(spec.block_column) <= to_block)
-                )
+                # SQL text: one parse, not a py4j round trip per operator
+                c = f"`{spec.block_column}`"
+                df = df.filter(f"{c} >= {int(from_block)} AND {c} <= {int(to_block)}")
             if spec.predicate is not None:
                 df = df.filter(spec.predicate)
             if spec.columns is not None:
