@@ -7214,10 +7214,11 @@ def q_cpi_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair_cpi_and_direct + common.py:indexed_instructions — reference
     meteora_swaps.py:190-219, 257-299): the positional index is
     assigned AFTER filtering to only this program's swap|CPI rows, the
-    CPI event is joined at index+1 WITHIN that filtered sequence, swaps
-    whose CPI is missing are silently dropped (the reference's two-way
-    boolean-split quirk), and a/b-keyed columns resolve to input/output
-    by ``b_to_a``.
+    CPI event is paired at index+1 WITHIN that filtered sequence (a
+    ``lead`` in the window the index shares), swaps whose CPI is
+    missing are silently dropped (the reference's two-way boolean-split
+    quirk), and a/b-keyed columns resolve to input/output by
+    ``b_to_a``.
 
     The fixture synthesizes an instruction stream from lineitem with
     four row kinds: swap (m=1), CPI (m=2), wrong-discriminator same-
@@ -7256,13 +7257,10 @@ def q_cpi_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") % 7).cast("long").alias("_kb"),
         (F.col("l_orderkey") * 13 % 100000).cast("long").alias("_amt"),
     )
-    # mirror the pipeline's ctx.batch_cache: the indexed frame feeds
-    # BOTH the swap and CPI branches — without materialization each
-    # branch re-executes the positional-index window
-    idx = C.indexed_instructions(ins, F.col("_m").isin(1, 2)).localCheckpoint(
-        eager=False
-    )
-    swaps = idx.filter(F.col("_m") == 1).select(
+    # one frame of swap and CPI rows: a CPI row carries its event in
+    # the struct ``cpi``; the fixture has no token programs, so those
+    # a/b columns are NULL
+    rows = C.indexed_instructions(ins, F.col("_m").isin(1, 2)).select(
         "block_slot",
         "transaction_index",
         "instruction_index",
@@ -7270,17 +7268,18 @@ def q_cpi_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("mb"), F.col("_kb")).alias("token_b_mint"),
         F.concat(F.lit("va"), F.col("_ka")).alias("token_a_vault"),
         F.concat(F.lit("vb"), F.col("_kb")).alias("token_b_vault"),
+        F.lit(None).cast("string").alias("token_a_program"),
+        F.lit(None).cast("string").alias("token_b_program"),
+        F.when(
+            F.col("_m") == 2,
+            F.struct(
+                F.col("_b2a").alias("b_to_a"),
+                F.col("_amt").alias("input_amount"),
+                (F.col("_amt") * 3).alias("output_amount"),
+            ),
+        ).alias("cpi"),
     )
-    cpi = idx.filter(F.col("_m") == 2).select(
-        "block_slot",
-        "transaction_index",
-        "instruction_index",
-        F.col("_b2a").alias("b_to_a"),
-        F.col("_amt").alias("actual_amount_in"),
-        (F.col("_amt") * 3).alias("output_amount"),
-    )
-    out = pair_cpi_and_direct(swaps, cpi)
-    return out.select(
+    return pair_cpi_and_direct(rows).select(
         "block_slot",
         "transaction_index",
         "instruction_index",
@@ -7289,7 +7288,7 @@ def q_cpi_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "output_mint",
         "input_vault",
         "output_vault",
-        F.col("input_amount").alias("input_amount"),
+        "input_amount",
         "output_amount",
         "found_cpi",
     )

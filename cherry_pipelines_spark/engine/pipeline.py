@@ -48,12 +48,13 @@ class PipelineContext:
 
     def batch_cache(self, df):
         """Cache ``df`` for the lifetime of this batch (released by the
-        runner right after the sink write).  For subtrees referenced by
-        several downstream branches — e.g. the positional-index window
-        that every discriminator split filters — caching once replaces
-        N recomputations of a shuffle+sort with one; a batch is bounded
-        (batch_size blocks), so the footprint is small and freed
-        promptly."""
+        runner right after the sink write).  For a subtree that several
+        downstream branches read — its one user is the docs curate
+        pipeline, whose deduplicated frame feeds the contamination
+        check, the clean join and the sample — caching once replaces N
+        recomputations with one; a batch is bounded (batch_size blocks),
+        so the footprint is small and freed promptly.  The SVM pipelines
+        need none: each reads its fused decode in one pass."""
         df = df.cache()
         self.extra.setdefault("_batch_cached", []).append(df)
         return df

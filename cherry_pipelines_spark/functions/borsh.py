@@ -452,10 +452,12 @@ def decode_instructions_multi(
     e.g. one discriminator a prefix of another, decode the row under
     both).  Output is the fused frame
     ``<passthrough> + a0..a9 + rest_of_accounts + _kind +
-    <key>__<param> ...`` — feed it to :func:`split_decoded` (after a
-    per-batch cache, so the Python stage executes once) for per-kind
-    frames IDENTICAL to the per-branch ``decode_instructions_df``
-    output.
+    <key>__<param> ...``, one row per (instruction, kind).  Read it in
+    one pass: :func:`kind_columns` gives each kind's columns as SQL
+    over this frame, so a projection filtered to one ``_kind`` is
+    IDENTICAL to the per-branch ``decode_instructions_df`` output, and
+    a projection over several kinds takes each column from the row's
+    own kind.
 
     Why: each ``decode_instructions_df`` call is its own mapInPandas
     stage — a reference-shaped pipeline with 8+ discriminator branches
@@ -471,7 +473,7 @@ def decode_instructions_multi(
         raise ValueError("decode_instructions_multi: kinds must be non-empty")
     if len({k[0] for k in kinds}) != len(kinds):
         # Duplicate keys would emit duplicate "<key>__<param>" schema
-        # fields; split_decoded's select on them would be ambiguous.
+        # fields, and a `_kind` value no projection could tell apart.
         raise ValueError(
             "decode_instructions_multi: kind keys must be unique, got "
             + repr(sorted(k[0] for k in kinds))
@@ -613,27 +615,3 @@ def kind_columns(
         for p in sig.params
         if want is None or p.name in want
     ]
-
-
-def split_decoded(
-    fused: DataFrame,
-    kinds: "list[tuple]",
-    passthrough: tuple[str, ...] = (
-        "block_slot",
-        "transaction_index",
-        "instruction_address",
-    ),
-) -> "dict[str, DataFrame]":
-    """Per-kind frames from a :func:`decode_instructions_multi` result —
-    pure JVM projections (filter on ``_kind`` + account renames +
-    un-prefixing), schema-identical to per-branch
-    ``decode_instructions_df`` output.  Cache the fused frame per batch
-    BEFORE splitting (``ctx.batch_cache``) or each branch re-executes
-    the Python stage."""
-    return {
-        k[0]: fused.filter(f"`_kind` = '{k[0]}'").selectExpr(
-            *[f"`{c}`" for c in passthrough],
-            *[f"{sql} AS `{name}`" for name, sql in kind_columns(k)],
-        )
-        for k in kinds
-    }

@@ -7,7 +7,9 @@ output.
 Note the indexing difference vs orca/raydium: the positional index is
 assigned AFTER filtering to only this program's swap|CPI instructions
 (meteora_swaps.py:201-208), so the CPI event is at index+1 within that
-filtered sequence.
+filtered sequence.  As in orca and raydium, the decode is one pass:
+both kinds come out of one mapInPandas boundary in one frame, and the
+pairing is a ``lead`` window over it, not a join of two branches.
 """
 
 from __future__ import annotations
@@ -72,22 +74,6 @@ CPI_SIGNATURE = B.InstructionSignature(
 )
 
 
-def split_step(bundle: TableBundle, ctx) -> TableBundle:
-    """Filter to this program's swap|CPI rows FIRST, then index
-    (meteora_swaps.py:190-219).  The swap/CPI discriminator split
-    itself moved into the fused decode (see ``decode_step``); this
-    step's job is the FILTERED positional index the CPI adjacency
-    join keys on."""
-    out = dict(bundle)
-    keep = (F.col("program_id") == F.lit(CP_AMM_PROGRAM_ID)) & (
-        C.starts_with(F.col("data"), SWAP_DISCRIMINATOR)
-        | C.starts_with(F.col("data"), CPI_DISCRIMINATOR)
-    )
-    out["ins"] = ctx.batch_cache(C.indexed_instructions(bundle["instructions"], keep))
-    del out["instructions"]
-    return out
-
-
 # both kinds decode through ONE Arrow boundary (round-11 verdict #4:
 # meteora ran per-branch decode chains — 2 mapInPandas stages over the
 # same parent rows — while raydium/orca were already fused)
@@ -98,24 +84,18 @@ _MULTI_KINDS = [
 
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
-    """meteora_swaps.py:222-254, fused: swap + CPI rows dispatch inside
-    one mapInPandas batch (decode_instructions_multi); per-kind frames
-    are JVM projections over the per-batch cache, schema-identical to
-    the per-branch decode_instructions_df output (the CPI frame keeps
-    its narrower 3-column passthrough by projection)."""
+    """meteora_swaps.py:190-254: filter to this program's swap|CPI rows
+    FIRST, then index, then decode both kinds through one mapInPandas
+    boundary.  Swaps and CPI events stay in the one ``decoded`` frame,
+    which the process step reads in a single pass."""
     out = dict(bundle)
-    fused = ctx.batch_cache(
-        B.decode_instructions_multi(
-            out.pop("ins"), _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH
-        )
+    keep = (F.col("program_id") == F.lit(CP_AMM_PROGRAM_ID)) & (
+        C.starts_with(F.col("data"), SWAP_DISCRIMINATOR)
+        | C.starts_with(F.col("data"), CPI_DISCRIMINATOR)
     )
-    parts = B.split_decoded(fused, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH)
-    out["swaps"] = parts["swaps"]
-    out["cpi"] = parts["cpi"].select(
-        "block_slot",
-        "transaction_index",
-        "instruction_index",
-        *[p.name for p in CPI_SIGNATURE.params],
+    ins = C.indexed_instructions(out.pop("instructions"), keep)
+    out["decoded"] = B.decode_instructions_multi(
+        ins, _MULTI_KINDS, passthrough=C.DECODE_PASSTHROUGH
     )
     return out
 
@@ -168,52 +148,66 @@ _DIRECTIONAL = (
 )
 
 
-def pair_cpi_and_direct(
-    swaps: DataFrame,
-    cpi: DataFrame,
-    directional: tuple[tuple[str, str, str, str], ...] = _DIRECTIONAL,
-) -> DataFrame:
-    """J7 core (meteora_swaps.py:257-299), reusable: attach each swap's
-    self-emitted CPI event at ``instruction_index + 1`` WITHIN the
-    filtered swap|CPI sequence (one left join on the 3-key), rename the
-    CPI's ``actual_amount_in`` to ``input_amount``, silently drop swaps
-    whose CPI was not found (the reference's two-way eq(True)/eq(False)
-    split quirk: NULL ``b_to_a`` matches neither side), then resolve
-    each (token_a_X, token_b_X) pair present in ``swaps`` into
-    input/output columns by ``b_to_a`` — a single-pass F.when instead of
-    the reference's filter+rename+vstack.
+def pair_cpi_and_direct(rows: DataFrame) -> DataFrame:
+    """J7 core (meteora_swaps.py:257-299), shared with the registry query
+    ``cpi_pairing``.  ``rows`` holds swap and CPI rows in one frame,
+    indexed by ``instruction_index`` within the filtered swap|CPI
+    sequence of each (block_slot, transaction_index): a CPI row carries
+    its event in the struct ``cpi``, a swap row has ``cpi`` NULL.
 
-    Scale shape: one shuffle on (block_slot, transaction_index) keys
-    for the equi-join; the direction swap is map-only."""
-    cpi = cpi.withColumn("found_cpi", F.lit(True))
-    # the CPI decode re-emits amount_in/minimum_amount_out and a `pool`
-    # bytes param — swap's own columns win (reference join keeps left
-    # columns unsuffixed); rename the CPI duplicates away
-    dup = [c for c in ("pool", "amount_in", "minimum_amount_out") if c in cpi.columns]
-    cpi = cpi.drop(*dup).withColumnRenamed("instruction_index", "_cpi_idx")
-    out = swaps.withColumn("_cpi_idx", F.col("instruction_index") + 1).join(
-        cpi, on=["block_slot", "transaction_index", "_cpi_idx"], how="left"
+    Each swap takes the event at ``instruction_index`` + 1: ``lead(1)``
+    in one window by instruction_index, kept only when its index is
+    exactly one more (an instruction the decode dropped leaves a gap, as
+    in ``common.with_adjacent_transfers``).  The event's fields become
+    columns.  Swaps with no event, or one with a NULL ``b_to_a``, are
+    dropped: the reference's eq(True)/eq(False) split quirk.  The a/b
+    columns resolve to input/output by ``b_to_a``, a CASE per side
+    instead of the reference's filter + rename + vstack."""
+    w = "OVER (PARTITION BY block_slot, transaction_index ORDER BY instruction_index)"
+    event = "CASE WHEN cpi IS NOT NULL THEN named_struct('i', instruction_index, 'e', cpi) END"
+
+    def side(a_col: str, b_col: str) -> str:  # a_col when a→b, b_col when b→a
+        return f"CASE WHEN _c.e.b_to_a THEN {b_col} ELSE {a_col} END"
+
+    roles = [
+        expr
+        for a_col, b_col, in_name, out_name in _DIRECTIONAL
+        for expr in (f"{side(a_col, b_col)} AS {in_name}", f"{side(b_col, a_col)} AS {out_name}")
+    ]
+    return (
+        rows.withColumn("_c", F.expr(f"lead({event}) {w}"))
+        .filter("cpi IS NULL AND _c.i = instruction_index + 1 AND _c.e.b_to_a IS NOT NULL")
+        .selectExpr("*", "_c.e.*", *roles, "true AS found_cpi")
+        .drop("cpi", "_c")
     )
-    if "actual_amount_in" in out.columns:
-        out = out.withColumnRenamed("actual_amount_in", "input_amount")
-    out = out.filter(F.col("b_to_a").isNotNull())
-    b2a = F.col("b_to_a")
-    for a_col, b_col, in_name, out_name in directional:
-        if a_col in swaps.columns and b_col in swaps.columns:
-            out = out.withColumn(
-                in_name, F.when(~b2a, F.col(a_col)).otherwise(F.col(b_col))
-            ).withColumn(
-                out_name, F.when(~b2a, F.col(b_col)).otherwise(F.col(a_col))
-            )
-    return out.drop("_cpi_idx")
+
+
+def _rows(decoded: DataFrame) -> DataFrame:
+    """The fused decode as the one frame :func:`pair_cpi_and_direct`
+    reads: each swap column by name, and on CPI rows the event as the
+    struct ``cpi``.  The event leaves out the params the swap has too
+    (pool, amount_in, minimum_amount_out: the swap's own win, as the
+    reference's join keeps its left columns) and names
+    ``actual_amount_in`` ``input_amount`` (meteora_swaps.py:257-276)."""
+    swap = B.kind_columns(_MULTI_KINDS[0])
+    own = {name for name, _ in swap}
+    event = ", ".join(
+        f"'{'input_amount' if name == 'actual_amount_in' else name}', {sql}"
+        for name, sql in B.kind_columns(_MULTI_KINDS[1])
+        if name not in own
+    )
+    return decoded.selectExpr(
+        *C.DECODE_PASSTHROUGH,
+        *[f"{sql} AS {name}" for name, sql in swap],
+        f"CASE WHEN `_kind` = 'cpi' THEN named_struct({event}) END AS cpi",
+    )
 
 
 def process_step(bundle: TableBundle, ctx) -> TableBundle:
-    """meteora_swaps.py:257-327: CPI pairing at index+1, then direction
-    swap (single-pass F.when replaces the filter+rename+vstack)."""
-    swaps = pair_cpi_and_direct(bundle["swaps"], bundle["cpi"]).select(
-        *[c for c in _OUT_COLS if c not in ("block_height", "timestamp")]
-    )
+    """meteora_swaps.py:257-327: the CPI pairing at index+1 and the
+    direction swap in one pass over the fused decode, then the tx/block
+    joins."""
+    swaps = pair_cpi_and_direct(_rows(bundle["decoded"])).select(*_OUT_COLS)
     swaps = C.join_tx_and_blocks(swaps, bundle["transactions"], bundle["blocks"])
     return {
         TABLE_NAME: swaps,
@@ -240,7 +234,6 @@ def build_pipeline(
         },
     )
     steps = [
-        PyStep(split_step, name="split_instructions"),
         PyStep(decode_step, name="svm_decode_instructions"),
         PyStep(process_step, name="process_data"),
     ]

@@ -1,16 +1,15 @@
 """Orca pool-initialization metadata pipeline — capability parity with
 /root/reference/src/cherry_pipelines/svm/orca_metadata.py: two
 initialize_pool instruction versions, typed-NULL padded union, tx/block
-joins, single output table (no anchor, no token balances).
+joins, single output table (no anchor, no token balances).  Both
+versions decode in one mapInPandas pass, and the union is one
+projection over that fused frame.
 
 The v2 signature has 14 account names, so token_program_a (index 10)
 onward map through ``rest_of_accounts`` — exercised here for real.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from cherry_pipelines_spark.engine.pipeline import Pipeline
 from cherry_pipelines_spark.engine.step import PyStep, TableBundle
@@ -84,70 +83,46 @@ _SHARED = (
 # both versions decode through ONE Arrow boundary (round-11 verdict
 # #4: the v1/v2 branches ran separate mapInPandas stages over the same
 # parent rows); the multi dispatcher's program+discriminator routing
-# subsumes the old split_step's filters exactly (orca_metadata.py:
+# subsumes the reference's split filters exactly (orca_metadata.py:
 # 147-165)
 _MULTI_KINDS = [
     ("inits_v1", (PROGRAM_ID,), SIGNATURE_V1),
     ("inits_v2", (PROGRAM_ID,), SIGNATURE_V2),
 ]
 
+# the output columns after the version tag: v2's accounts, then v1's
+# whirlpool_bump and the params both versions have
+_COLUMNS = (
+    *SIGNATURE_V2.accounts_names,
+    "whirlpool_bump",
+    "tick_spacing",
+    "initial_sqrt_price",
+)
+
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
     out = dict(bundle)
-    fused = ctx.batch_cache(
-        B.decode_instructions_multi(
-            out.pop("instructions"), _MULTI_KINDS, passthrough=_SHARED
-        )
+    out["decoded"] = B.decode_instructions_multi(
+        out.pop("instructions"), _MULTI_KINDS, passthrough=_SHARED
     )
-    out.update(B.split_decoded(fused, _MULTI_KINDS, passthrough=_SHARED))
     return out
 
 
+def _column(name: str) -> str:
+    """One output column from the row's own version, NULL where that
+    version lacks it; v1 has one token_program for both sides."""
+    v1_name = "token_program" if name.startswith("token_program_") else name
+    return f"{C.by_kind(_MULTI_KINDS, name, v1_name)} AS {name}"
+
+
 def process_step(bundle: TableBundle, ctx) -> TableBundle:
-    """orca_metadata.py:168-244: typed-NULL padded union + joins."""
-    v1 = bundle["inits_v1"].select(
+    """orca_metadata.py:168-244: the typed-NULL padded v1/v2 union as
+    one projection over the fused decode, then the tx/block joins."""
+    inits = bundle["decoded"].selectExpr(
         *_SHARED,
-        F.lit(1).cast("int").alias("version"),
-        "whirlpools_config",
-        "token_mint_a",
-        "token_mint_b",
-        F.lit(None).cast("binary").alias("token_badge_a"),
-        F.lit(None).cast("binary").alias("token_badge_b"),
-        "funder",
-        "whirlpool",
-        "token_vault_a",
-        "token_vault_b",
-        "fee_tier",
-        F.col("token_program").alias("token_program_a"),
-        F.col("token_program").alias("token_program_b"),
-        "system_program",
-        "rent",
-        "whirlpool_bump",
-        "tick_spacing",
-        "initial_sqrt_price",
+        "CASE WHEN `_kind` = 'inits_v1' THEN 1 ELSE 2 END AS version",
+        *[_column(name) for name in _COLUMNS],
     )
-    v2 = bundle["inits_v2"].select(
-        *_SHARED,
-        F.lit(2).cast("int").alias("version"),
-        "whirlpools_config",
-        "token_mint_a",
-        "token_mint_b",
-        "token_badge_a",
-        "token_badge_b",
-        "funder",
-        "whirlpool",
-        "token_vault_a",
-        "token_vault_b",
-        "fee_tier",
-        "token_program_a",
-        "token_program_b",
-        "system_program",
-        "rent",
-        F.lit(None).cast("int").alias("whirlpool_bump"),
-        "tick_spacing",
-        "initial_sqrt_price",
-    )
-    inits = v1.unionByName(v2)
     inits = C.join_tx_and_blocks(inits, bundle["transactions"], bundle["blocks"])
     return {TABLE_NAME: inits}
 

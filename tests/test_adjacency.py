@@ -1,15 +1,19 @@
-"""J2 positional adjacency as one window over the fused decode
-(pipelines/svm/common.py:with_adjacent_transfers) against a plain-Python
-replay of the reference's index+1 / index+2 lookups, on random
-instruction layouts with undecoded gaps, back-to-back swaps and both
-transfer shapes."""
+"""Positional adjacency as one window over the fused decode, against a
+plain-Python replay of the reference's index lookups on random
+instruction layouts: J2 (pipelines/svm/common.py:with_adjacent_transfers,
+the transfers at index+1 / index+2, with undecoded gaps, back-to-back
+swaps and both transfer shapes) and J7 (meteora_swaps.pair_cpi_and_direct,
+the CPI event at index+1, with undecoded CPI gaps, back-to-back swaps,
+a CPI before its swap and a swap that ends its group)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from cherry_pipelines_spark.pipelines.svm import common as C
+from cherry_pipelines_spark.pipelines.svm import meteora_swaps as met
+from cherry_pipelines_spark.pipelines.svm import orca_metadata as meta
 from cherry_pipelines_spark.pipelines.svm import orca_swaps as orca
 from cherry_pipelines_spark.pipelines.svm import raydium_swaps as ray
 
@@ -81,11 +85,78 @@ def test_window_adjacency_equals_index_lookups(spark, groups):
     assert got_rows == _expected(rows)
 
 
+CPI_SCHEMA = (
+    "block_slot bigint, transaction_index bigint, instruction_index int, "
+    "token_a_mint string, token_b_mint string, token_a_vault string, "
+    "token_b_vault string, token_a_program string, token_b_program string, "
+    "amount_in bigint, cpi struct<b_to_a: boolean, input_amount: bigint, "
+    "output_amount: bigint>"
+)
+# "gap" is a CPI the decode dropped; "cpi_null" an event with no b_to_a
+CPI_KINDS = ("swap", "cpi", "cpi_null", "gap")
+
+
+def _cpi_rows(groups):
+    rows, n = [], 0
+    for g, kinds in enumerate(groups):
+        for idx, kind in enumerate(kinds):
+            n += 1
+            if kind == "swap":
+                sides = [f"{c}{s}{n}" for c in "mvp" for s in "ab"]
+                rows.append((g // 2, g % 2, idx, *sides, n, None))
+            elif kind != "gap":
+                b_to_a = None if kind == "cpi_null" else n % 3 == 0
+                # a CPI row's own amount_in must not reach the swap
+                rows.append((g // 2, g % 2, idx, *[None] * 6, -n, (b_to_a, 10 * n, 30 * n)))
+    return rows
+
+
+def _cpi_expected(rows):
+    """The reference's pairing: the CPI at index+1 of the same (slot,
+    tx), swaps without one (or with a NULL b_to_a) dropped, a/b sides
+    swapped when b_to_a."""
+    events = {(r[0], r[1], r[2]): r[10] for r in rows if r[10] is not None}
+    out = set()
+    for r in rows:
+        e = events.get((r[0], r[1], r[2] + 1))
+        if r[10] is not None or e is None or e[0] is None:
+            continue
+        a, b = (r[3], r[5], r[7]), (r[4], r[6], r[8])
+        src, dst = (b, a) if e[0] else (a, b)
+        out.add((r[0], r[1], r[2], e[0], *src, *dst, e[1], e[2], r[9]))
+    return out
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(groups=st.lists(st.lists(st.sampled_from(CPI_KINDS), min_size=1, max_size=8),
+                       min_size=1, max_size=6))
+# a CPI before its swap, a CPI gap after a swap, back-to-back swaps and
+# a swap that ends its group, in one layout
+@example(groups=[["cpi", "swap", "gap", "cpi", "swap", "swap", "cpi", "swap"], ["swap"]])
+def test_cpi_lead_pairing_equals_index_lookups(spark, groups):
+    rows = _cpi_rows(groups)
+    got = met.pair_cpi_and_direct(spark.createDataFrame(rows, CPI_SCHEMA)).select(
+        "block_slot", "transaction_index", "instruction_index", "b_to_a",
+        "input_mint", "input_vault", "input_token_program",
+        "output_mint", "output_vault", "output_token_program",
+        "input_amount", "output_amount", "amount_in",
+    )
+    assert set(map(tuple, got.collect())) == _cpi_expected(rows)
+
+
 def test_swap_pipeline_kinds_are_disjoint():
-    """The window reads the next rows of a group as the next indexes,
+    """The windows read the next rows of a group as the next indexes,
     which holds while no instruction decodes under two kinds: kinds
-    sharing a program must not have one discriminator prefix another."""
-    for kinds in (orca._MULTI_KINDS, ray._MULTI_KINDS):
+    sharing a program must not have one discriminator prefix another.
+    orca_metadata has no window, but its one projection over the fused
+    decode equals the reference's union only while no init decodes
+    as both versions."""
+    for kinds in (orca._MULTI_KINDS, ray._MULTI_KINDS, met._MULTI_KINDS, meta._MULTI_KINDS):
         for i, a in enumerate(kinds):
             for b in kinds[i + 1:]:
                 if set(a[1]) & set(b[1]):

@@ -267,10 +267,19 @@ def test_drop_params_suffix_skip(spark):
         B.decode_instructions_df(df, sig, drop_params=("amount",))
 
 
+def _kind_frame(fused, kind, passthrough):
+    """One kind of the fused decode, projected with kind_columns: the
+    projection the SVM pipelines make over the fused frame."""
+    return fused.filter(f"`_kind` = '{kind[0]}'").selectExpr(
+        *[f"`{c}`" for c in passthrough],
+        *[f"{sql} AS `{name}`" for name, sql in B.kind_columns(kind)],
+    )
+
+
 def test_multi_decode_matches_per_branch(spark):
     """Differential gate for the fused dispatch (round-11): every kind
-    of decode_instructions_multi + split_decoded must be row- and
-    value-identical to filter-then-decode_instructions_df, including
+    of decode_instructions_multi, projected with kind_columns, must be
+    row- and value-identical to filter-then-decode_instructions_df, including
     the variable-width fallback path, drop_params trimming, the
     malformed-row drop, and program-set routing."""
     import struct as _s
@@ -320,7 +329,7 @@ def test_multi_decode_matches_per_branch(spark):
     pt = ("block_slot", "transaction_index", "instruction_address")
     kinds = [("kx", (progA,), sigX), ("ky", (progB,), sigY)]
     fused = B.decode_instructions_multi(df, kinds, passthrough=pt)
-    split = B.split_decoded(fused, kinds, passthrough=pt)
+    split = {k[0]: _kind_frame(fused, k, pt) for k in kinds}
     for key, progs, sig in kinds:
         branch = df.filter(
             F.col("program_id").isin([*progs])
@@ -334,11 +343,9 @@ def test_multi_decode_matches_per_branch(spark):
         assert g == w, (key, g, w)
     # drop_params parity through the kind tuple's 4th slot
     kinds_dp = [("ky", (progB,), sigY, ("blob",))]
-    got = B.split_decoded(
-        B.decode_instructions_multi(df, kinds_dp, passthrough=pt),
-        kinds_dp,
-        passthrough=pt,
-    )["ky"]
+    got = _kind_frame(
+        B.decode_instructions_multi(df, kinds_dp, passthrough=pt), kinds_dp[0], pt
+    )
     want = B.decode_instructions_df(
         df.filter(F.col("program_id") == F.lit(progB)),
         sigY,
@@ -388,9 +395,8 @@ def test_multi_decode_overlapping_kinds_decode_under_both(spark):
     df = spark.createDataFrame(rows, schema)
     pt = ("block_slot", "transaction_index", "instruction_address")
     kinds = [("short", (prog,), sig_short), ("long", (prog,), sig_long)]
-    split = B.split_decoded(
-        B.decode_instructions_multi(df, kinds, passthrough=pt), kinds, passthrough=pt
-    )
+    fused = B.decode_instructions_multi(df, kinds, passthrough=pt)
+    split = {k[0]: _kind_frame(fused, k, pt) for k in kinds}
     for key, progs, sig in kinds:
         branch = df.filter(
             F.col("program_id").isin([*progs])

@@ -347,48 +347,45 @@ def test_swap_prices_backfill_matches_batch_loop(spark, tmp_path_factory):
 
 def test_pair_cpi_and_direct_unit(spark):
     """J7 core semantics in isolation (reference meteora_swaps.py:
-    257-299): index+1 pairing, the missing-CPI silent drop, the
-    b_to_a direction swap, and CPI duplicate-column precedence."""
-    import pyspark.sql.functions as F
-
+    257-299), over one frame of swap and CPI rows: index+1 pairing, the
+    missing-CPI silent drop, the b_to_a direction swap, and the swap's
+    own value winning over the CPI row's for a column both carry."""
     from cherry_pipelines_spark.pipelines.svm.meteora_swaps import (
         pair_cpi_and_direct,
     )
 
-    swaps = spark.createDataFrame(
+    ab = lambda x, y: (f"m{x}", f"m{y}", f"v{x}", f"v{y}", f"p{x}", f"p{y}")
+    cpi_row = (None,) * 6
+    rows = spark.createDataFrame(
         [
-            # (slot, txi, idx, a_mint, b_mint, a_vault, b_vault, amount_in)
-            (1, 0, 0, "ma", "mb", "va", "vb", 5),   # paired, a->b
-            (1, 0, 2, "mc", "md", "vc", "vd", 6),   # paired, b->a
-            (2, 0, 0, "me", "mf", "ve", "vf", 7),   # CPI missing -> dropped
+            # (slot, txi, idx, a/b mint, vault, program, amount_in, cpi)
+            (1, 0, 0, *ab("a", "b"), 5, None),  # paired, a->b
+            (1, 0, 1, *cpi_row, 999, (False, 50, 500)),
+            (1, 0, 2, *ab("c", "d"), 6, None),  # paired, b->a
+            (1, 0, 3, *cpi_row, 999, (True, 60, 600)),
+            (2, 0, 0, *ab("e", "f"), 7, None),  # CPI missing -> dropped
+            (2, 0, 5, *cpi_row, 999, (True, 70, 700)),  # not at idx+1 of any swap
         ],
         "block_slot long, transaction_index long, instruction_index long,"
         "token_a_mint string, token_b_mint string,"
-        "token_a_vault string, token_b_vault string, amount_in long",
-    )
-    cpi = spark.createDataFrame(
-        [
-            # (slot, txi, idx, b_to_a, actual_amount_in, output_amount, amount_in dup)
-            (1, 0, 1, False, 50, 500, 999),
-            (1, 0, 3, True, 60, 600, 999),
-            (2, 0, 5, True, 70, 700, 999),  # not at idx+1 of any swap
-        ],
-        "block_slot long, transaction_index long, instruction_index long,"
-        "b_to_a boolean, actual_amount_in long, output_amount long,"
-        "amount_in long",
+        "token_a_vault string, token_b_vault string,"
+        "token_a_program string, token_b_program string, amount_in long,"
+        "cpi struct<b_to_a: boolean, input_amount: long, output_amount: long>",
     )
     out = {
         r["instruction_index"]: r.asDict()
-        for r in pair_cpi_and_direct(swaps, cpi).collect()
+        for r in pair_cpi_and_direct(rows).collect()
     }
     assert sorted(out) == [0, 2]  # the slot-2 swap silently dropped
     fwd = out[0]
     assert (fwd["input_mint"], fwd["output_mint"]) == ("ma", "mb")
     assert (fwd["input_vault"], fwd["output_vault"]) == ("va", "vb")
+    assert (fwd["input_token_program"], fwd["output_token_program"]) == ("pa", "pb")
     assert fwd["input_amount"] == 50 and fwd["output_amount"] == 500
-    assert fwd["amount_in"] == 5  # the swap's own column wins the dup
-    assert fwd["found_cpi"] is True
+    assert fwd["amount_in"] == 5  # the swap's own column wins over the CPI row's
+    assert fwd["found_cpi"] is True and fwd["b_to_a"] is False
     rev = out[2]
     assert (rev["input_mint"], rev["output_mint"]) == ("md", "mc")
     assert (rev["input_vault"], rev["output_vault"]) == ("vd", "vc")
+    assert (rev["input_token_program"], rev["output_token_program"]) == ("pd", "pc")
     assert rev["input_amount"] == 60 and rev["output_amount"] == 600

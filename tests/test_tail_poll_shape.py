@@ -1,7 +1,8 @@
-"""Shape of one tail poll of orca_swaps on the SVM fixtures, counted in
-Spark jobs per phase (job groups): the tip probe, the checkpoint read
-and the source load run none, and the batch write is one pass over one
-Python decode.  Also pins the swap tables' output schemas."""
+"""Shape of one tail poll of the SVM pipelines on the SVM fixtures,
+counted in Spark jobs per phase (job groups): the tip probe, the
+checkpoint read and the source load run none, and the batch write is
+one pass over one Python decode.  Also pins the swap tables' output
+schemas."""
 
 from __future__ import annotations
 
@@ -14,6 +15,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from cherry_pipelines_spark.engine.pipeline import PipelineContext
+from cherry_pipelines_spark.pipelines.svm import meteora_swaps as met
+from cherry_pipelines_spark.pipelines.svm import orca_metadata as meta
 from cherry_pipelines_spark.pipelines.svm import orca_swaps as orca
 from cherry_pipelines_spark.pipelines.svm import raydium_swaps as ray
 from tests.svm_fixtures_gen import gen_svm_fixtures
@@ -88,8 +91,10 @@ def tail_sources(spark, tmp_path_factory):
 
 
 def _pipeline(module, src, sink_dir):
-    return module.build_pipeline(src["instructions"], src["transactions"], src["blocks"],
-                                 src["token_balances"], sink_dir)
+    tables = [src["instructions"], src["transactions"], src["blocks"]]
+    if module is not meta:  # the one SVM pipeline without token balances
+        tables.append(src["token_balances"])
+    return module.build_pipeline(*tables, sink_dir)
 
 
 def _walk(plan):
@@ -115,8 +120,15 @@ def _python_decodes(plan) -> int:
     return sum(n.getClass().getSimpleName() == "MapInPandasExec" for n in _walk(plan))
 
 
-def test_orca_tail_poll_runs_only_the_write_jobs(spark, tail_sources, tmp_path):
-    pipe = _pipeline(orca, tail_sources, str(tmp_path / "sink"))
+# (pipeline, most Spark jobs its batch write may run)
+@pytest.mark.parametrize(
+    "module, max_write_jobs",
+    [(orca, 7), (met, 7), (meta, 4)],
+    ids=["orca", "meteora", "orca_metadata"],
+)
+def test_tail_poll_runs_only_the_write_jobs(spark, tail_sources, tmp_path, module,
+                                            max_write_jobs):
+    pipe = _pipeline(module, tail_sources, str(tmp_path / "sink"))
     assert pipe.run(spark, 0, HISTORY, batch_size=HISTORY + 1) == 1
 
     with job_group(spark) as tip_jobs:
@@ -132,12 +144,12 @@ def test_orca_tail_poll_runs_only_the_write_jobs(spark, tail_sources, tmp_path):
         bundle = step.run(spark, bundle, ctx)
     with job_group(spark) as write_jobs:
         pipe.sink.write(spark, bundle, start, tip)
-    assert len(write_jobs) <= 7, write_jobs
+    assert len(write_jobs) <= max_write_jobs, write_jobs
     assert pipe.sink.next_block(spark) > start
 
-    swaps = bundle[orca.TABLE_NAME]
-    swaps.collect()
-    plan = swaps._jdf.queryExecution().executedPlan()
+    table = bundle[module.TABLE_NAME]
+    table.collect()
+    plan = table._jdf.queryExecution().executedPlan()
     text = plan.toString()
     assert "InMemoryRelation" not in text and "InMemoryTableScan" not in text
     assert _python_decodes(plan) == 1
