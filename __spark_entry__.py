@@ -2371,16 +2371,15 @@ FROM events GROUP BY event_type
 
 @_build_time
 def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-batch stateful streaming dedup (applyInPandasWithState):
-    first occurrence per user_id across all micro-batches.  Which *row*
-    emits first is batch-order dependent, so only the (deterministic)
-    key set is returned and oracle-checked."""
-    from cherry_pipelines_spark.streaming.stateful import streaming_distinct
-
+    """Cross-batch streaming dedup (Spark's native ``dropDuplicates``,
+    a ``StreamingDeduplicate`` state store): first occurrence per
+    user_id across all micro-batches.  Which *row* emits first is
+    batch-order dependent, so only the (deterministic) key set is
+    returned and oracle-checked."""
     stream = _events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value", "props", "secs"
     )
-    out = streaming_distinct(stream, "user_id")
+    out = stream.dropDuplicates(["user_id"])
     with _events_state_scope(spark, sf_dir):
         _run_stream(_memory_sink(out, "append", "stream_distinct_out"))
     return spark.table("stream_distinct_out").select("user_id")

@@ -48,7 +48,9 @@ def _local_rows(df: DataFrame) -> list | None:
     """``df.collect()`` when the frame is a driver-local relation
     (``similarity._local_metadata``'s VALUES form, or anything Catalyst
     folds to a LocalRelation) — executeCollect on a LocalTableScan runs
-    ZERO cluster jobs; returns None otherwise.
+    ZERO cluster jobs; returns None otherwise, and the caller keeps
+    its broadcast join (the frame is not driver-scale as far as the
+    plan shows).
 
     Why callers care (round-14, guide §5): the stored-index paths
     re-derive tiny metadata aggregations (``_centroid_row``, the
@@ -132,7 +134,6 @@ def assign_clusters(
     pts = points.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    lit_cents = None
     local = _local_rows(cents)
     if local:
         # driver-local centroids fold into the expression tree as one
@@ -143,25 +144,12 @@ def assign_clusters(
         # sort_array(collect_list(...)): cluster_id is unique.
         from cherry_pipelines_spark.operators.similarity import _sql_lit
 
-        try:
-            cid_t = cents.schema["cluster_id"].dataType
-            cent_t = cents.schema["centroid"].dataType
-            lit_cents = F.expr(
-                "array("
-                + ",".join(
-                    "named_struct('cluster_id', "
-                    + _sql_lit(r["cluster_id"], cid_t)
-                    + ", 'centroid', "
-                    + _sql_lit(r["centroid"], cent_t)
-                    + ")"
-                    for r in sorted(local, key=lambda r: r["cluster_id"])
-                )
-                + ")"
-            )
-        except ValueError:
-            lit_cents = None
-    if lit_cents is not None:
-        pts = pts.withColumn("cents", lit_cents)
+        fields = [cents.schema["cluster_id"], cents.schema["centroid"]]
+        lit = _sql_lit(
+            sorted(local, key=lambda r: r["cluster_id"]),
+            T.ArrayType(T.StructType(fields)),
+        )
+        pts = pts.withColumn("cents", F.expr(lit))
     else:
         pts = pts.crossJoin(F.broadcast(_centroid_row(cents)))
     best = F.array_min(

@@ -24,6 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 
@@ -35,10 +36,7 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-from pyspark.sql.types import DoubleType
-
-
-@pandas_udf(DoubleType())
+@pandas_udf(T.DoubleType())
 def _dot_fold(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-vectorized dot product, bit-identical to :func:`_dot`.
 
@@ -812,32 +810,18 @@ def _pq_assign(
     generates 0..m-1 from the same codebooks' m)."""
     from cherry_pipelines_spark.operators.clustering import _local_rows
 
-    joined = None
     local = _local_rows(cents)
     if local:
-        try:
-            sub_t = cents.schema["sub"].dataType
-            cid_t = cents.schema["cluster_id"].dataType
-            cent_t = cents.schema["centroid"].dataType
-            by_sub: dict = {}
-            for r in local:
-                by_sub.setdefault(r["sub"], []).append(r)
-            entries = []
-            for s in sorted(by_sub):
-                arr = ",".join(
-                    "named_struct('cluster_id', "
-                    + _sql_lit(r["cluster_id"], cid_t)
-                    + ", 'centroid', "
-                    + _sql_lit(r["centroid"], cent_t)
-                    + ")"
-                    for r in sorted(by_sub[s], key=lambda r: r["cluster_id"])
-                )
-                entries.append(f"{_sql_lit(s, sub_t)}, array({arr})")
-            cmap = F.expr("map(" + ",".join(entries) + ")")
-            joined = pts.withColumn("cents", F.element_at(cmap, F.col("sub")))
-        except ValueError:
-            joined = None
-    if joined is None:
+        fields = [cents.schema["cluster_id"], cents.schema["centroid"]]
+        cmap_t = T.MapType(
+            cents.schema["sub"].dataType, T.ArrayType(T.StructType(fields))
+        )
+        by_sub: dict = {}
+        for r in sorted(local, key=lambda r: (r["sub"], r["cluster_id"])):
+            by_sub.setdefault(r["sub"], []).append(r)
+        cmap = F.expr(_sql_lit(by_sub, cmap_t))
+        joined = pts.withColumn("cents", F.element_at(cmap, F.col("sub")))
+    else:
         cents_row = cents.groupBy("sub").agg(
             F.sort_array(
                 F.collect_list(F.struct("cluster_id", "centroid"))
@@ -959,8 +943,9 @@ def pq_encode(
     """Encode every vector to its per-subspace nearest-centroid codes,
     LONG layout: ``(id, sub, code)`` — m rows per vector, join-ready
     against an ADC lookup table (and trivially pivotable to an
-    array<tinyint> for storage).  One broadcast join + fold for all m
-    subspaces.
+    array<tinyint> for storage).  One fold for all m subspaces over the
+    codebooks, broadcast-joined or, when driver-local, a constant map
+    (:func:`_pq_assign`).
 
     ``carry`` columns of ``df`` ride along unchanged (output becomes
     ``(id, sub, code, *carry)``): the trained-index builders carry
@@ -1113,30 +1098,42 @@ def _pq_partial(q: Column, cent: Column) -> Column:
 def _sql_lit(v, dt) -> str:
     """SQL literal text reproducing value ``v`` of Spark type ``dt``
     EXACTLY (longs verbatim, doubles via ``repr`` — shortest
-    round-trip decimal ⇒ the identical float64) — shared by
-    :func:`_local_metadata`'s VALUES form and the expression-literal
-    metadata paths (one ``F.expr`` parse JVM-side instead of thousands
-    of py4j Column calls: building the same tree node-by-node measured
-    ~8 s of driver time PER PLAN).  Raises ValueError on shapes with
-    no exact literal form (non-finite doubles, empty arrays, exotic
-    types) — callers fall back to the join/VALUES-free path."""
+    round-trip decimal ⇒ the identical float64; NaN and ±Inf as casts
+    of their string names) — shared by :func:`_local_metadata`'s
+    VALUES form and the expression-literal metadata paths (one
+    ``F.expr`` parse JVM-side instead of thousands of py4j Column
+    calls: building the same tree node-by-node measured ~8 s of driver
+    time PER PLAN).  Arrays are Python sequences, maps Python dicts
+    (written in iteration order), structs anything indexable by field
+    name.  A type outside those raises TypeError."""
     import math
-
-    from pyspark.sql import types as T
 
     if v is None:
         return f"CAST(NULL AS {dt.simpleString()})"
     if isinstance(dt, T.DoubleType):
-        if not math.isfinite(v):
-            raise ValueError("non-finite double")
+        if math.isnan(v):
+            return "CAST('nan' AS DOUBLE)"
+        if math.isinf(v):
+            return "CAST('inf' AS DOUBLE)" if v > 0 else "CAST('-inf' AS DOUBLE)"
         return repr(float(v)) + "D"
     if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
         return f"CAST({int(v)} AS {dt.simpleString()})"
     if isinstance(dt, T.ArrayType):
         if len(v) == 0:
-            # array() parses as array<void> — a silent type drift
-            raise ValueError("empty array has no typed literal")
+            # a bare array() parses as array<void>: cast it to its type
+            return f"CAST(array() AS {dt.simpleString()})"
         return "array(" + ",".join(_sql_lit(x, dt.elementType) for x in v) + ")"
+    if isinstance(dt, T.MapType):
+        if len(v) == 0:
+            return f"CAST(map() AS {dt.simpleString()})"
+        return (
+            "map("
+            + ",".join(
+                f"{_sql_lit(k, dt.keyType)}, {_sql_lit(x, dt.valueType)}"
+                for k, x in v.items()
+            )
+            + ")"
+        )
     if isinstance(dt, T.StructType):
         return (
             "named_struct("
@@ -1146,13 +1143,13 @@ def _sql_lit(v, dt) -> str:
             )
             + ")"
         )
-    raise ValueError(f"no literal form for {dt}")
+    raise TypeError(f"no literal form for {dt}")
 
 
 def _local_metadata(df: DataFrame) -> DataFrame:
     """Collect a METADATA-scale frame (index cells / codebooks —
     n_cells + m·ksub rows, a few KB) and rebuild it as a driver-local
-    literal relation with identical schema and values.
+    ``VALUES`` LocalRelation with identical schema and values.
 
     Why: the stored-index lifecycle queries are driver-job-latency
     bound (round-13 driver profile: build 17 / append 6×4 / compact 32
@@ -1168,42 +1165,27 @@ def _local_metadata(df: DataFrame) -> DataFrame:
     metadata is exactly that).  At 100 TB the frames stay n_cells +
     m·ksub rows — corpus-size-independent by construction.
 
-    Values round-trip exactly: longs verbatim, doubles via ``repr``
-    (shortest round-trip decimal → the identical float64).  Only the
-    metadata column shapes (integral / double / array<double>) take
-    the literal route; anything else — or non-finite doubles, which
-    have no SQL literal — falls back to a 1-slice parallelized frame
-    (same values, one tiny task per broadcast instead of zero)."""
-    spark = df.sparkSession
+    Values round-trip exactly (see :func:`_sql_lit`).  An empty frame
+    becomes one row of typed NULLs under ``WHERE false``, which
+    Catalyst folds to an empty LocalRelation of the same schema."""
     rows = df.collect()
     schema = df.schema
-
-    try:
-        if not rows:
-            raise ValueError("empty metadata frame")
-        cols = ", ".join(
-            f"col{i + 1} AS {f.name}" for i, f in enumerate(schema.fields)
-        )
-        vals = ", ".join(
-            "("
-            + ", ".join(_sql_lit(r[f.name], f.dataType) for f in schema.fields)
-            + ")"
-            for r in rows
-        )
-        out = spark.sql(f"SELECT {cols} FROM VALUES {vals}")
-        # names + types must reproduce exactly (nullability may tighten:
-        # literals without NULLs plan non-nullable — same values)
-        drift = [
-            (f.name, f.dataType.simpleString())
-            for f in out.schema.fields
-        ] != [(f.name, f.dataType.simpleString()) for f in schema.fields]
-        if drift:
-            raise ValueError(f"literal schema drift: {out.schema} != {schema}")
-        return out
-    except ValueError:
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema
-        )
+    cols = ", ".join(f"col{i + 1} AS {f.name}" for i, f in enumerate(schema.fields))
+    vals = ", ".join(
+        "("
+        + ", ".join(_sql_lit(r[f.name], f.dataType) for f in schema.fields)
+        + ")"
+        for r in rows or [dict.fromkeys(schema.names)]
+    )
+    where = "" if rows else " WHERE false"
+    out = df.sparkSession.sql(f"SELECT {cols} FROM VALUES {vals}{where}")
+    # names + types must reproduce exactly (nullability may tighten:
+    # literals without NULLs plan non-nullable — same values)
+    if [(f.name, f.dataType.simpleString()) for f in out.schema.fields] != [
+        (f.name, f.dataType.simpleString()) for f in schema.fields
+    ]:
+        raise TypeError(f"literal schema drift: {out.schema} != {schema}")
+    return out
 
 
 def build_stored_ivfpq_index(
@@ -1392,8 +1374,9 @@ def _frozen_residuals(
     """Assign ``df`` to FROZEN trained cells and compute exact-float
     residuals — the encode-only half of the trained-IVF-PQ head, shared
     by initial builds (after Lloyd) and incremental appends (no
-    training at all).  Map-only: the centroid frame broadcasts, the
-    corpus never shuffles.  Returns ``(id, cell, _r)``.
+    training at all).  Map-only: driver-local centroids fold in as a
+    constant map keyed by ``cluster_id``, any other centroid frame
+    broadcasts; the corpus never shuffles.  Returns ``(id, cell, _r)``.
 
     ``spread=True`` fans a one-file corpus out before the CPU-bound
     assign/residual HOF chain (guide §2.5); the APPEND path passes
@@ -1419,7 +1402,6 @@ def _frozen_residuals(
     from cherry_pipelines_spark.operators.clustering import _local_rows
 
     assigned = assign_clusters(df, cents, vec_col, id_col, k_hint=n_cells_hint)
-    resid = None
     local = _local_rows(cents)
     if local:
         # driver-local centroids: the broadcast join that re-attached
@@ -1429,25 +1411,19 @@ def _frozen_residuals(
         # assignment lands in one of these ids by construction (argmin
         # over exactly this cell set), so the lookup never misses —
         # same rows as the inner join.
-        try:
-            cid_t = cents.schema["cluster_id"].dataType
-            cent_t = cents.schema["centroid"].dataType
-            entries = ",".join(
-                f"{_sql_lit(r['cluster_id'], cid_t)}, "
-                f"{_sql_lit(r['centroid'], cent_t)}"
-                for r in local
-            )
-            cent_of = F.element_at(
-                F.expr(f"map({entries})"), F.col("cluster_id")
-            )
-            resid = assigned.select(
-                F.col(id_col),
-                F.col("cluster_id").alias("cell"),
-                F.zip_with(F.col("_v"), cent_of, lambda a, b: a - b).alias("_r"),
-            )
-        except ValueError:
-            resid = None
-    if resid is None:
+        cmap_t = T.MapType(
+            cents.schema["cluster_id"].dataType, cents.schema["centroid"].dataType
+        )
+        cmap = F.expr(
+            _sql_lit({r["cluster_id"]: r["centroid"] for r in local}, cmap_t)
+        )
+        cent_of = F.element_at(cmap, F.col("cluster_id"))
+        resid = assigned.select(
+            F.col(id_col),
+            F.col("cluster_id").alias("cell"),
+            F.zip_with(F.col("_v"), cent_of, lambda a, b: a - b).alias("_r"),
+        )
+    else:
         cent_cols = cents.select(
             F.col("cluster_id").alias("cell"), F.col("centroid").alias("_cent")
         )

@@ -9,9 +9,9 @@ Stages (the standard curation funnel):
    drops boilerplate/templated documents.
 2. **exact dedup** — sha256 content hash, keep the lowest doc_id per
    hash *within the batch*.  Cross-batch exact dedup belongs to either
-   a global pass over the curated output (``operators/dedup``) or the
-   streaming form (``streaming/stateful.streaming_distinct``) — a batch
-   pipeline step must not hold unbounded cross-batch state.
+   a global pass over the curated output (``operators/dedup``) or a
+   streaming ``dropDuplicates`` — a batch pipeline step must not hold
+   unbounded cross-batch state.
 3. **decontamination** — drop documents sharing any word n-gram with a
    benchmark set (broadcast probe, ``operators/contamination``).
 4. **stratified sampling** — deterministic per-language keep rates

@@ -2,9 +2,6 @@ from cherry_pipelines_spark.streaming.incremental import (  # noqa: F401
     StreamingPipeline,
     follow,
 )
-from cherry_pipelines_spark.streaming.stateful import (  # noqa: F401
-    streaming_distinct,
-)
 from cherry_pipelines_spark.streaming.windows import (  # noqa: F401
     tumbling_window_agg,
 )

@@ -1,16 +1,16 @@
 """Custom stateful streaming operators (``applyInPandasWithState``).
 
 The reference needs no streaming state (block data is immutable —
-SURVEY §2.7); a continuously-ingesting training-data pipeline does:
-cross-batch exact dedup is the canonical case.  ``streaming_distinct``
-keeps one tiny state cell per key ("seen") and emits only the first
-occurrence of each key across the whole stream.
+SURVEY §2.7); a continuously-ingesting training-data pipeline does.
+Cross-batch exact dedup needs no custom state: Spark's native
+``dropDuplicates`` keeps the first occurrence of each key across
+micro-batches.  The operators here hold state that no native operator
+expresses: sessions closed by event-time timeout, a truncated EWMA,
+running top-k admission, and LSH band claims for near-dedup.
 
 Scale shape: state is partitioned by the grouping key — the same hash
-shuffle as a groupBy — and each cell is a single boolean, so state
-size is O(distinct keys seen), the minimum any exact streaming dedup
-can hold.  For bounded-staleness dedup, swap NoTimeout for a processing
-/event-time timeout and let old keys expire.
+shuffle as a groupBy — so state size is O(distinct keys seen) times
+the per-key cell.
 """
 
 from __future__ import annotations
@@ -139,38 +139,6 @@ def state_partition_scope(
         yield
     finally:
         spark.conf.set(key, prev)
-
-
-def streaming_distinct(df: DataFrame, key_col: str) -> DataFrame:
-    """First occurrence of every ``key_col`` value across all
-    micro-batches; later duplicates (same batch or later batches) are
-    dropped.  Works on a streaming DataFrame; on a batch frame it
-    degenerates to dropDuplicates semantics."""
-    out_schema = df.schema
-    state_schema = T.StructType([T.StructField("seen", T.BooleanType())])
-
-    def dedupe(
-        key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            return
-        first = None
-        for pdf in pdfs:
-            if len(pdf):
-                first = pdf.iloc[:1]
-                break
-        if first is None:
-            return
-        state.update((True,))
-        yield first
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        dedupe,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def streaming_sessionize(

@@ -49,19 +49,21 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    for name in unknown:
+        print(f"FAIL {name}: no such query")
+    run = [name for name in qs if not only or name in only]
     spark = get_spark("check_entry")
     con = duckdb.connect()
     for t in entry_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in run:
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = qs[name](spark, sf_dir).toPandas()
         except Exception as ex:
             print(f"FAIL {name}: spark error: {ex}")
             failed.append(name)
@@ -96,8 +98,8 @@ def main() -> int:
             failed.append(name)
             continue
         print(f"PASS {name}: {len(sdf)} rows")
-    print(f"\n{len(qs) - len(failed)}/{len(qs) if not only else len(only)} passed")
-    return 1 if failed else 0
+    print(f"\n{len(run) - len(failed)}/{len(run)} passed")
+    return 1 if failed or unknown else 0
 
 
 if __name__ == "__main__":

@@ -126,8 +126,6 @@ def test_watermark_append_mode_two_batches(spark, tmp_path):
 def test_streaming_distinct_across_batches(spark, tmp_path):
     """Cross-batch stateful dedup: a key seen in batch 1 must be
     suppressed in batch 2; within a batch only the first row emits."""
-    from cherry_pipelines_spark.streaming.stateful import streaming_distinct
-
     src = str(tmp_path / "dd_src")
     os.makedirs(src)
     mk = lambda rows: spark.createDataFrame(rows, "k string, v long")
@@ -135,7 +133,7 @@ def test_streaming_distinct_across_batches(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     q = (
-        streaming_distinct(stream, "k")
+        stream.dropDuplicates(["k"])
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("dd_out")
@@ -185,10 +183,7 @@ def test_state_partition_scope_binds_and_restores(spark, tmp_path):
     """The scope pins the stateful query's shuffle width for its
     lifecycle (state-store count at first batch) and restores the
     session conf afterwards; results are partition-count independent."""
-    from cherry_pipelines_spark.streaming.stateful import (
-        state_partition_scope,
-        streaming_distinct,
-    )
+    from cherry_pipelines_spark.streaming.stateful import state_partition_scope
 
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
@@ -202,7 +197,7 @@ def test_state_partition_scope_binds_and_restores(spark, tmp_path):
         assert spark.conf.get(key) == "1"
         stream = spark.readStream.schema(schema).parquet(src)
         q = (
-            streaming_distinct(stream, "k")
+            stream.dropDuplicates(["k"])
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("scope_out")
