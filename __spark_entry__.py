@@ -859,9 +859,10 @@ def q_evm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Source fanned out BEFORE the synthesis select (same round-7 lesson
     as q_evm_decode_batch): a one-file orders scan would otherwise run
-    the whole lpad/hex/unhex fixture build on one core, and the
-    decoder's own fan_out only spreads the Python stage (measured
-    1.04 → 0.70 s at sf0.1)."""
+    the whole lpad/hex/unhex fixture build on one core (measured
+    1.04 → 0.70 s at sf0.1, when the decode was a Python stage with a
+    fan-out of its own; the static decode is now SQL and runs in the
+    partitions it is given)."""
     from cherry_pipelines_spark.functions.abi import decode_events_df
     from cherry_pipelines_spark.operators.text import fan_out
 

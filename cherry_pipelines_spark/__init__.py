@@ -12,8 +12,9 @@ similarity search, text analysis, multimodal plumbing) designed for
 100 TB scale.
 
 Everything is expressed through the Spark DataFrame/SQL API so Catalyst
-plans the physical execution; Python only appears in Arrow-batched
-pandas UDFs for the binary decoders.
+plans the physical execution.  Fixed-width binary decodes (static ABI
+events, fixed borsh layouts) are generated SQL expressions too; Python
+only appears in Arrow-batched pandas UDFs for variable-width layouts.
 """
 
 __version__ = "0.1.0"

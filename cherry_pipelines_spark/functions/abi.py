@@ -19,14 +19,17 @@ policy: SURVEY §7.3).  Dynamic types — ``T[]`` of any static base,
 the standard head-offset/tail layout; indexed dynamic params are
 refused (on-chain they are keccak digests, unrecoverable).
 
-The hot path is :func:`decode_events_df`, which builds an Arrow-batched
-``mapInPandas`` over the logs table — Python runs only on the byte
-blobs, everything before/after stays JVM-side.  All-static signatures
-decode as vectorized numpy word matrices; dynamic signatures decode
-vectorized too (cumulative-offset tail arithmetic + fancy-indexed byte
-gathers — the canonical tightly-packed layout makes every position
-derivable without a per-row walk), with the per-row tail walk kept as
-the differential-pinned reference path.
+The entry point is :func:`decode_events_df`.  An all-static signature
+(every param one 32-byte word, e.g. ERC-20 ``Transfer``) decodes as
+Spark SQL text (:func:`_static_sql`): word offsets are constants, so
+each param is a ``substring`` of its topic or the data, and each int a
+``conv`` of its hex.  It runs as codegen'd Catalyst expressions with no
+Python worker.  A signature with a dynamic param decodes in an
+Arrow-batched ``mapInPandas`` over the byte blobs, vectorized with
+numpy (cumulative-offset tail arithmetic + fancy-indexed byte gathers —
+the canonical tightly-packed layout makes every position derivable
+without a per-row walk), with the per-row tail walk kept as the
+differential-pinned reference path.
 """
 
 from __future__ import annotations
@@ -39,6 +42,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from cherry_pipelines_spark.functions.uint256 import dec38_sql
 
 _DEC38_MAX = 10**38 - 1
 
@@ -489,6 +494,77 @@ def _vec_elem_decoder(base: str):
     return None
 
 
+def _static_sql(
+    sig: EventSignature, topic_cols: tuple[str, ...], data_col: str
+) -> tuple[list[tuple[str, str]], str, list[tuple[str, str, str]]]:
+    """The decode of an all-static ``sig`` as Spark SQL text:
+    ``(hexes, ok, cols)``.
+
+    * ``hexes``: ``(name, SQL)`` of the hex text the int params read, one
+      per topic or data blob they read.
+    * ``ok`` holds for a log that decodes: each indexed param's topic is
+      32 bytes, every later topic is NULL, the data is exactly one word
+      per other param, and each address, uint and intN word is padded as
+      the ABI encodes it (zeros; the sign for intN).  It reads only the
+      binary columns.
+    * ``cols``: ``(name, SQL, type)`` per output column, over the binary
+      columns and ``hexes``; ``<name>_raw`` follows each wide int.
+
+    Values match :func:`_decode_word`: wide ints are DECIMAL(38,0), NULL
+    beyond ±(10^38-1), with the word kept raw."""
+    n_indexed = sum(p.indexed for p in sig.params)
+    if n_indexed > len(topic_cols):  # a topic is always missing
+        return [], "false", [
+            (f.name, "NULL", f.dataType.simpleString()) for f in output_schema(sig).fields
+        ]
+    data = f"`{data_col}`"
+    checks = [f"length(`{t}`) = 32" for t in topic_cols[:n_indexed]]
+    checks += [f"`{t}` IS NULL" for t in topic_cols[n_indexed:]]
+    checks.append(f"coalesce(length({data}), 0) = {32 * (len(sig.params) - n_indexed)}")
+    hexes: dict[str, str] = {}
+    cols: list[tuple[str, str, str]] = []
+    ti = di = 0
+    for p in sig.params:
+        if p.indexed:
+            word, src, pos = f"`{topic_cols[ti]}`", f"_hex_t{ti}", 1
+            ti += 1
+        else:
+            word, src, pos = f"substring({data}, {32 * di + 1}, 32)", "_hex_d", 64 * di + 1
+            di += 1
+        typ = spark_type_for(p.type).simpleString()
+        if p.type == "address":
+            checks.append(f"substring({word}, 1, 12) = X'{'00' * 12}'")
+            cols.append((p.name, f"substring({word}, 13, 20)", typ))
+            continue
+        if p.type == "bool":
+            cols.append((p.name, f"substring({word}, 32, 1) != X'00'", typ))
+            continue
+        m = re.match(r"^bytes(\d+)$", p.type)
+        if m:
+            cols.append((p.name, f"substring({word}, 1, {m.group(1)})", typ))
+            continue
+        m = re.match(r"^(u?)int(\d+)$", p.type)
+        unsigned, bits = m.group(1) == "u", int(m.group(2))
+        lead = 32 - bits // 8
+        if unsigned and lead:
+            checks.append(f"substring({word}, 1, {lead}) = X'{'00' * lead}'")
+        elif not unsigned and lead:  # sign-extended: lead bytes copy the top bit
+            head = f"substring({word}, 1, {lead + 1})"
+            checks.append(f"({head} <= X'{'00' * lead}7F' OR {head} >= X'{'FF' * lead}80')")
+        hexes.setdefault(src, f"hex({word if p.indexed else data})")
+        wh = f"`{src}`" if p.indexed else f"substr(`{src}`, {pos}, 64)"
+        if not _wide_uint(p.type):  # uint <= 32 or int <= 64: a long
+            sql = (
+                f"conv(substr({wh}, 57, 8), 16, 10)" if unsigned
+                else f"conv(substr({wh}, 49, 16), 16, -10)"
+            )
+            cols.append((p.name, sql, typ))
+            continue
+        cols.append((p.name, dec38_sql(wh, 64, not unsigned), typ))
+        cols.append((f"{p.name}_raw", word, "binary"))
+    return list(hexes.items()), " AND ".join(checks), cols
+
+
 def decode_event_row(
     sig: EventSignature,
     topics: list[bytes | None],
@@ -523,15 +599,29 @@ def decode_events_df(
     sig = parse_event_signature(event_signature)
     out_fields = output_schema(sig)
     passthrough = [c for c in logs.columns if c not in (*topic_cols, data_col)]
+    if not any(_is_dynamic(p.type) for p in sig.params):
+        hexes, ok, cols = _static_sql(sig, topic_cols, data_col)
+        pq = [f"`{c}`" for c in passthrough]
+        src = logs.selectExpr(
+            *pq, *[f"`{c}`" for c in (*topic_cols, data_col)],
+            *[f"{sql} AS `{name}`" for name, sql in hexes], f"{ok} AS `_ok`",
+        )
+        if allow_decode_fail:  # a row that fails keeps NULL decoded columns
+            return src.selectExpr(
+                *pq, *[f"CAST(IF(`_ok`, {sql}, NULL) AS {typ}) AS `{name}`" for name, sql, typ in cols]
+            )
+        return src.filter("`_ok`").selectExpr(
+            *pq, *[f"CAST({sql} AS {typ}) AS `{name}`" for name, sql, typ in cols]
+        )
+
     schema = T.StructType(
         [logs.schema[c] for c in passthrough] + list(out_fields.fields)
     )
     decoded_names = [f.name for f in out_fields.fields]
     n_topics = len(topic_cols)
-    has_dynamic = any(_is_dynamic(p.type) for p in sig.params)
 
     def _assemble(pdf, good, value_of):
-        """Shared output-assembly epilogue for all three mapper closures:
+        """Shared output-assembly epilogue for both mapper closures:
         ``good`` holds the surviving input row indices, ``value_of(name)``
         the decoded values for those rows (1-D object ndarray, or None
         when the column produced nothing this batch).  allow_decode_fail
@@ -669,62 +759,6 @@ def decode_events_df(
             out[p.name] = np.array([bytes(row[:nb]) for row in m], dtype=object)
             return out
         raise ValueError(f"unsupported ABI type {p.type!r}")
-
-    def mapper(batches):
-        for pdf in batches:
-            n = len(pdf)
-            topic_arrays = [pdf[c].to_numpy() for c in topic_cols]
-            data_arr = pdf[data_col].to_numpy()
-            # structural validity: required topics present (32 bytes),
-            # extra topics absent, data exactly n_words words
-            ok = np.ones(n, dtype=bool)
-            if n_indexed > n_topics:
-                # more indexed params than topic columns: every row is
-                # missing a topic (decode_event_row's "missing topic")
-                ok[:] = False
-            for k in range(n_topics):
-                present = np.fromiter(
-                    (x is not None and len(x) == 32 for x in topic_arrays[k]),
-                    bool, count=n,
-                )
-                if k < n_indexed:
-                    ok &= present
-                else:
-                    ok &= np.fromiter(
-                        (x is None for x in topic_arrays[k]), bool, count=n
-                    )
-            dlens = np.fromiter(
-                (len(x) if x is not None else 0 for x in data_arr),
-                np.int64, count=n,
-            )
-            ok &= dlens == 32 * n_words
-            idx = np.nonzero(ok)[0]
-            fail = np.zeros(len(idx), dtype=bool)
-            cols: dict[str, np.ndarray] = {}
-            if len(idx):
-                mats: dict[tuple[str, int], np.ndarray] = {}
-                for p, src, k in plan:
-                    if src == "t":
-                        mats[("t", k)] = np.frombuffer(
-                            b"".join(topic_arrays[k][i] for i in idx), np.uint8
-                        ).reshape(len(idx), 32)
-                if n_words:
-                    dm = np.frombuffer(
-                        b"".join(data_arr[i] for i in idx), np.uint8
-                    ).reshape(len(idx), 32 * n_words)
-                for p, src, k in plan:
-                    m = (
-                        mats[("t", k)]
-                        if src == "t"
-                        else dm[:, 32 * k : 32 * (k + 1)]
-                    )
-                    cols.update(_decode_matrix(p, m, fail))
-            good = idx[~fail] if len(idx) else idx
-            yield _assemble(
-                pdf,
-                good,
-                lambda name: cols[name][~fail] if name in cols else None,
-            )
 
     # Vectorized dynamic path: for every supported dynamic kind —
     # ``T[]`` of any static base, ``bytes``, ``string`` — the canonical
@@ -911,10 +945,5 @@ def decode_events_df(
     # one partition, which would serialize all rows through one Python
     # worker (no-op when the input is already parallel)
     src = fan_out(logs.select(*passthrough, *topic_cols, data_col))
-    if not has_dynamic:
-        fn = mapper
-    elif dyn_vectorizable and not _force_row_path:
-        fn = mapper_dyn
-    else:
-        fn = row_mapper
+    fn = mapper_dyn if dyn_vectorizable and not _force_row_path else row_mapper
     return src.mapInPandas(fn, schema)

@@ -19,8 +19,14 @@ Spark type mapping: U8/U16/U32 → long-compatible ints, U64 → long
 Decimal(38,0) (overflow → NULL), Bool → boolean, FixedArray(U8,n) →
 binary, other arrays → ArrayType, Struct → StructType, Enum → string.
 
-Decoding is per-row byte parsing, so it runs as an Arrow-batched
-``mapInPandas`` — the only Python in the pipeline hot path.
+A signature whose params are all fixed-width (every kind of the SVM
+pipelines) decodes as Spark SQL text: byte offsets are constants, so
+each param is a ``substring`` and, for ints, a ``conv`` of its hex.
+It runs as codegen'd Catalyst expressions in the stage that feeds it,
+with no Python worker.  A variable-width param (Option, Array, Struct)
+makes the decode a per-row byte parse in an Arrow-batched
+``mapInPandas``; that reader, :func:`decode_instruction_data`, is also
+the reference the SQL path is tested against.
 """
 
 from __future__ import annotations
@@ -29,10 +35,11 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any, Iterable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from cherry_pipelines_spark.functions.uint256 import dec38_sql
 
 _DEC38_MAX = 10**38 - 1
 _I64_MAX = 2**63 - 1
@@ -232,55 +239,72 @@ def _fixed_layout(
     return out
 
 
-def _decode_fixed_batch(
-    layout: list[tuple[str, int, int, str, Any]],
-    mat: "np.ndarray",
-) -> tuple[dict[str, Any], "np.ndarray"]:
-    """Vectorized decode of an (n_rows, total_width) uint8 matrix.
-    Returns (column values keyed by param name, keep-row mask).  Value
-    and drop semantics match :func:`_read_value` exactly: bad bool /
-    bad enum byte drops the row; U64 > int64 max and |128-bit| >
-    Decimal(38) max become NULL values."""
-    n = mat.shape[0]
-    keep = np.ones(n, dtype=bool)
-    cols: dict[str, Any] = {}
-    for name, off, w, kind, meta in layout:
-        sub = mat[:, off : off + w]
-        if kind in ("uint", "int", "u64"):
-            code = f"{'<i' if kind == 'int' else '<u'}{w}"
-            vals = (
-                sub.ravel().view(code)  # reinterpret, not value-cast
-                if w == 1
-                else np.ascontiguousarray(sub).view(code).ravel()
-            )
-            if kind == "u64":
-                over = vals > np.uint64(_I64_MAX)
-                if over.any():
-                    obj = vals.astype(object)
-                    obj[over] = None
-                    cols[name] = obj
-                else:
-                    cols[name] = vals.astype(np.int64)
-            else:
-                cols[name] = vals.astype(np.int64)
-        elif kind in ("u128", "i128"):
-            signed = kind == "i128"
-            vals_o = np.empty(n, dtype=object)
-            for i in range(n):
-                v = int.from_bytes(bytes(sub[i]), "little", signed=signed)
-                vals_o[i] = Decimal(v) if abs(v) <= _DEC38_MAX else None
-            cols[name] = vals_o
+def _fixed_width(sig: InstructionSignature) -> int | None:
+    """Bytes a fixed-width ``sig`` decode reads, discriminator included;
+    None when a param is variable-width."""
+    layout = _fixed_layout(sig.params)
+    return None if layout is None else len(sig.discriminator) + sum(e[2] for e in layout)
+
+
+def _fixed_sql(
+    sig: InstructionSignature, data_col: str, span: int
+) -> tuple[str, list[tuple[str, str, Any, str]]]:
+    """The decode of a fixed-width ``sig`` as Spark SQL text, reading
+    ints from ``_r``: the hex of the first ``span`` (at least
+    :func:`_fixed_width`) bytes of the data, zero-padded, in reverse
+    order (:func:`_fixed_decode` makes it).  Borsh ints are
+    little-endian, so each int's big-endian hex is one ``substr`` of
+    ``_r``.  Returns ``(valid, cols)``:
+
+    * ``valid`` holds exactly for the data (discriminator already
+      matched) that :func:`decode_instruction_data` decodes: long
+      enough, every bool byte 0 or 1, every enum index in range.  It
+      reads only ``data_col``, so it stays a cheap binary filter.
+    * one ``(name, raw, finish, type)`` per param, ``type`` its Spark
+      SQL type.  A bool, enum or byte array has ``finish`` None and
+      ``raw`` its value, SQL over ``data_col``.  An int's ``raw`` is its
+      big-endian hex, SQL over ``_r``, and
+      ``finish(ref)`` its value from a reference to that hex.
+
+    Values and NULLs match :func:`_read_value`: U64 above 2^63-1 and
+    128-bit ints beyond ±(10^38-1) are NULL; trailing bytes are
+    ignored."""
+    layout = _fixed_layout(sig.params)
+    data = f"`{data_col}`"
+    dl = len(sig.discriminator)
+    width = dl + sum(e[2] for e in layout)
+    checks = [f"length({data}) >= {width}"]
+    cols: list[tuple[str, str, Any, str]] = []
+    for p, (name, off, w, kind, meta) in zip(sig.params, layout):
+        at = dl + off + 1  # 1-based byte position in the data
+        byte = f"substring({data}, {at}, 1)"
+        finish = None
+        if kind == "bytes":
+            raw = f"substring({data}, {at}, {w})"
         elif kind == "bool":
-            b = sub.ravel()
-            keep &= b <= 1
-            cols[name] = b == 1
+            checks.append(f"{byte} IN (X'00', X'01')")
+            raw = f"{byte} = X'01'"
         elif kind == "enum":
-            b = sub.ravel()
-            keep &= b < len(meta)
-            cols[name] = np.array(meta, dtype=object)[np.minimum(b, len(meta) - 1)]
-        else:  # bytes
-            cols[name] = np.array([bytes(row) for row in sub], dtype=object)
-    return cols, keep
+            if len(meta) < 256:
+                checks.append(f"{byte} < X'{len(meta):02X}'")
+            raw = f"CASE {byte} " + " ".join(
+                f"WHEN X'{i:02X}' THEN {_sql_string(v)}" for i, v in enumerate(meta)
+            ) + " END"
+        else:
+            raw = f"substr(`_r`, {2 * (span - (at - 1) - w) + 1}, {2 * w})"
+            if kind == "uint":
+                finish = lambda r: f"conv({r}, 16, 10)"  # noqa: E731
+            elif kind == "u64":
+                finish = lambda r: f"try_cast(conv({r}, 16, 10) AS BIGINT)"  # noqa: E731
+            elif kind == "int":  # sign-extend to 64 bits, read as signed
+                neg = "8".ljust(2 * w, "0")
+                finish = lambda r, neg=neg: (  # noqa: E731
+                    f"conv(lpad({r}, 16, IF({r} < '{neg}', '0', 'F')), 16, -10)"
+                )
+            else:  # u128 / i128
+                finish = lambda r, s=kind == "i128": dec38_sql(r, 32, s)  # noqa: E731
+        cols.append((name, raw, finish, spark_type_for(p.dtype).simpleString()))
+    return " AND ".join(checks), cols
 
 
 def decode_instruction_data(sig: InstructionSignature, data: bytes | None) -> dict | None:
@@ -315,13 +339,13 @@ def decode_instructions_df(
     orca_swaps.py:240-261, so a mismatch here is malformed input).
 
     Account mapping is a pure column rename: ``a0..a9`` →
-    ``accounts_names`` — done JVM-side before the decode UDF.
+    ``accounts_names``.
 
     ``drop_params`` skips decoding a SUFFIX of the signature's params
     entirely (borsh layouts are sequential, so an unused tail costs
     nothing to skip).  This matters when the tail is the one
     variable-width member of an otherwise fixed-width signature: the
-    whole decode stays on the vectorized fast path (orca v2's
+    whole decode stays in SQL (orca v2's
     ``remaining_accounts_info`` is the canonical case — decoded then
     dropped by the reference too, it never reaches the sink).  Rows are
     then validated on the decoded prefix only: a row whose *suffix*
@@ -343,42 +367,19 @@ def decode_instructions_df(
         F.col(data_col).startswith(F.lit(sig.discriminator))
     ).select(*passthrough, *acct_cols, data_col)
 
+    keep = [c for c in pre.columns if c != data_col]
+    span = _fixed_width(sig)
+    if span is not None:
+        valid, cols = _fixed_sql(sig, data_col, span)
+        return _fixed_decode(
+            pre.filter(valid), keep, data_col, span, [(name, None, *col) for name, *col in cols]
+        )
+
     param_fields = [
         T.StructField(p.name, spark_type_for(p.dtype), True) for p in sig.params
     ]
-    keep = [c for c in pre.columns if c != data_col]
     schema = T.StructType([pre.schema[c] for c in keep] + param_fields)
     param_names = [p.name for p in sig.params]
-    layout = _fixed_layout(sig.params)
-    disc_len = len(sig.discriminator)
-    fixed_width = sum(e[2] for e in layout) if layout is not None else 0
-
-    def fast_mapper(batches):
-        # all-fixed-width signature: one byte-matrix per Arrow batch,
-        # ``dim`` vectorized column decodes instead of a per-row reader
-        # (~10× on the decode boundary; identical drop/NULL semantics)
-        for pdf in batches:
-            data_arr = pdf[data_col].to_numpy()
-            exp = disc_len + fixed_width
-            lens = np.fromiter((len(d) for d in data_arr), np.int64, count=len(pdf))
-            valid = np.nonzero(lens >= exp)[0]
-            if len(valid) == 0:
-                empty = pdf.iloc[:0][list(keep)].copy()
-                for name in param_names:
-                    empty[name] = pd.Series([], dtype=object)
-                yield empty
-                continue
-            joined = b"".join(data_arr[i][disc_len:exp] for i in valid)
-            mat = np.frombuffer(joined, np.uint8).reshape(len(valid), fixed_width)
-            cols, keep_mask = _decode_fixed_batch(layout, mat)
-            kept = valid[keep_mask]
-            base = pdf.iloc[kept][list(keep)].reset_index(drop=True)
-            for name in param_names:
-                vals = cols[name][keep_mask]
-                base[name] = pd.Series(
-                    vals, dtype=object if vals.dtype == object else None
-                )
-            yield base
 
     def mapper(batches):
         # column-wise accumulation (same pattern as abi.decode_events_df):
@@ -407,8 +408,41 @@ def decode_instructions_df(
 
     # spread the Python decode boundary across workers (no-op when the
     # input is already parallel; single-file fixtures arrive 1-partition)
-    return fan_out(pre).mapInPandas(
-        fast_mapper if layout is not None else mapper, schema
+    return fan_out(pre).mapInPandas(mapper, schema)
+
+
+def _fixed_decode(
+    df: DataFrame, keep: list[str], data_col: str, span: int, cols: list[tuple]
+) -> DataFrame:
+    """``keep`` and the :func:`_fixed_sql` columns ``cols`` (for
+    ``span``), each as ``(out, kind, raw, finish, type)``: a ``kind``
+    other than None decodes only rows whose ``_kind`` is it, NULL
+    elsewhere.  Three projections: ``_r`` and the values read straight
+    from the data; each int's hex; each int's value, so a ``finish``
+    that reads its hex twice does not redo the ``substr``.  Latin-1 maps
+    each byte to one character, so ``decode``, ``reverse`` and
+    ``encode`` reverse the bytes for ``_r`` in three calls."""
+
+    def of_kind(kind, sql):
+        return sql if kind is None else f"CASE WHEN `_kind` = '{kind}' THEN {sql} END"
+
+    kq = [f"`{c}`" for c in keep]
+    direct = [f"`{c[0]}`" for c in cols if c[3] is None]
+    return (
+        df.selectExpr(
+            *kq,
+            f"hex(encode(reverse(decode(rpad(`{data_col}`, {span}, X'00'), 'ISO-8859-1')),"
+            " 'ISO-8859-1')) AS `_r`",
+            *[f"{of_kind(k, raw)} AS `{out}`" for out, k, raw, fin, _t in cols if fin is None],
+        )
+        .selectExpr(
+            *kq, *direct,
+            *[f"{of_kind(k, raw)} AS `{out}`" for out, k, raw, fin, _t in cols if fin is not None],
+        )
+        .selectExpr(*kq, *[
+            f"`{out}`" if fin is None else f"CAST({fin(f'`{out}`')} AS {typ}) AS `{out}`"
+            for out, _k, _r, fin, typ in cols
+        ])
     )
 
 
@@ -431,6 +465,10 @@ def _sql_binary(b: bytes) -> str:
     return f"X'{bytes(b).hex()}'"
 
 
+def _sql_string(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def decode_instructions_multi(
     instructions: DataFrame,
     kinds: "list[tuple]",
@@ -441,8 +479,8 @@ def decode_instructions_multi(
     ),
     data_col: str = "data",
 ) -> DataFrame:
-    """Decode MANY instruction signatures through ONE Python boundary —
-    the fused form of per-branch ``decode_instructions_df`` chains.
+    """Decode MANY instruction signatures in one pass: the fused form
+    of per-branch ``decode_instructions_df`` chains.
 
     ``kinds`` is a list of ``(key, programs, sig)`` or ``(key,
     programs, sig, drop_params)`` tuples: a row belongs to EVERY kind
@@ -459,15 +497,18 @@ def decode_instructions_multi(
     a projection over several kinds takes each column from the row's
     own kind.
 
-    Why: each ``decode_instructions_df`` call is its own mapInPandas
-    stage — a reference-shaped pipeline with 8+ discriminator branches
-    pays 10 Arrow boundaries per micro-batch (one per branch, all over
-    the same parent rows).  Fusing the dispatch into one mapper that
-    partitions each Arrow batch by (program, discriminator) and runs
-    the SAME vectorized fixed-width / per-row fallback kernels per
-    sub-batch measured 4x faster on the 20k-slot PIPEBENCH stream
-    (2.8 s -> 0.7 s for raydium's 10 branches, identical rows).  Drop
-    and NULL semantics are bit-identical per kind — pinned by the
+    Why: a reference-shaped pipeline has 8+ discriminator branches over
+    the same parent rows, and a decode per branch repeats the scan and
+    dispatch for each.  When every kind is fixed-width (every kind of
+    the SVM pipelines), the fused decode is SQL (:func:`_fixed_sql`):
+    each row is tagged with every kind it decodes under, an ``explode``
+    of the tags gives one row per (instruction, kind), and each column
+    is read from the row's own kind.  It runs as codegen'd expressions
+    in the stage that feeds it, with no Python worker and no exchange
+    of its own, so a window on the same keys above and below shares one
+    shuffle.  A kind set with a variable-width member decodes every
+    kind in ONE ``mapInPandas`` with the per-row reader.  Drop and NULL
+    semantics are bit-identical per kind — pinned by the
     differential pytest."""
     if not kinds:
         raise ValueError("decode_instructions_multi: kinds must be non-empty")
@@ -488,15 +529,42 @@ def decode_instructions_multi(
     ]
     # the dispatch filter as SQL text: parsed in one call, where the
     # Column form costs several py4j round trips per operator
-    pred = " OR ".join(
-        f"(`program_id` IN ({', '.join(_sql_binary(p) for p in progs)})"
-        f" AND startswith(`{data_col}`, {_sql_binary(sig.discriminator)}))"
+    routes = [
+        f"`program_id` IN ({', '.join(_sql_binary(p) for p in progs)})"
+        f" AND startswith(`{data_col}`, {_sql_binary(sig.discriminator)})"
         for _, progs, sig in norm
-    )
+    ]
+    pred = " OR ".join(f"({r})" for r in routes)
     sel = list(carry)
     if "program_id" not in sel:
         sel.append("program_id")
     pre = instructions.filter(pred).select(*sel, data_col)
+
+    widths = [_fixed_width(sig) for _k, _p, sig in norm]
+    if None not in widths:
+        span = max(widths)
+        specs = [(key, _fixed_sql(sig, data_col, span)) for key, _p, sig in norm]
+        cq = [f"`{c}`" for c in carry]
+        # one tag per kind the row decodes under, NULL where it does not,
+        # computed below the explode: the explode is where whole-stage
+        # codegen splits the stage into methods, so the tags land in one
+        # and the decode above in the other
+        tags = [
+            f"CASE WHEN {route} AND {valid} THEN '{key}' END AS `_k{i}`"
+            for i, (route, (key, (valid, _c))) in enumerate(zip(routes, specs))
+        ]
+        cols = [
+            (f"{key}__{name}", key, raw, fin, typ)
+            for key, (_v, kcols) in specs
+            for name, raw, fin, typ in kcols
+        ]
+        tagged = (
+            pre.selectExpr(*cq, f"`{data_col}`", *tags)
+            .selectExpr(*cq, f"`{data_col}`", "explode(array("
+                        + ", ".join(f"`_k{i}`" for i in range(len(specs))) + ")) AS `_kind`")
+            .filter("`_kind` IS NOT NULL")
+        )
+        return _fixed_decode(tagged, [*carry, "_kind"], data_col, span, cols)
 
     fields = [pre.schema[c] for c in carry] + [T.StructField("_kind", T.StringType())]
     for key, _progs, sig in norm:
@@ -507,12 +575,10 @@ def decode_instructions_multi(
     schema = T.StructType(fields)
     out_names = [f.name for f in schema.fields]
     kind_meta = [
-        (key, frozenset(progs), sig, _fixed_layout(sig.params), [p.name for p in sig.params])
+        (key, frozenset(progs), sig, [p.name for p in sig.params])
         for key, progs, sig in norm
     ]
-    all_prefixed = [
-        f"{key}__{nm}" for key, _p, _s, _l, pnames in kind_meta for nm in pnames
-    ]
+    all_prefixed = [f"{key}__{nm}" for key, _p, _s, pnames in kind_meta for nm in pnames]
 
     def fused(batches):
         for pdf in batches:
@@ -522,9 +588,7 @@ def decode_instructions_multi(
             prog = pdf["program_id"].to_numpy()
             data = pdf[data_col].to_numpy()
             frames = []
-            for key, progs, sig, layout, pnames in kind_meta:
-                disc = sig.discriminator
-                dl = len(disc)
+            for key, progs, sig, pnames in kind_meta:
                 # every kind sees every row, EXACTLY like the
                 # per-branch decode_instructions_df chain it replaces:
                 # a row whose (program, data) matches two kinds (one
@@ -533,54 +597,23 @@ def decode_instructions_multi(
                 # drop rows from the later kind and break the
                 # fused-vs-per-branch parity contract (pinned by the
                 # overlapping-kinds differential test)
-                mask = np.fromiter(
-                    (
-                        (p in progs) and bytes(d[:dl]) == disc
-                        for p, d in zip(prog, data)
-                    ),
-                    bool,
-                    count=n,
-                )
-                idx = np.nonzero(mask)[0]
-                if not len(idx):
+                outc: dict[str, list] = {nm: [] for nm in pnames}
+                kept_rows: list[int] = []
+                for i in range(n):
+                    if prog[i] not in progs:
+                        continue
+                    dec = decode_instruction_data(sig, bytes(data[i]))
+                    if dec is None:
+                        continue
+                    for nm in pnames:
+                        outc[nm].append(dec.get(nm))
+                    kept_rows.append(i)
+                if not kept_rows:
                     continue
-                sub = data[idx]
-                if layout is not None:
-                    fw = sum(e[2] for e in layout)
-                    exp = dl + fw
-                    lens = np.fromiter(
-                        (len(d) for d in sub), np.int64, count=len(sub)
-                    )
-                    valid = np.nonzero(lens >= exp)[0]
-                    if not len(valid):
-                        continue
-                    joined = b"".join(bytes(sub[i][dl:exp]) for i in valid)
-                    mat = np.frombuffer(joined, np.uint8).reshape(len(valid), fw)
-                    cols, keep_mask = _decode_fixed_batch(layout, mat)
-                    kept = idx[valid[keep_mask]]
-                    base = pdf.iloc[kept][carry].reset_index(drop=True)
-                    base["_kind"] = key
-                    for nm in pnames:
-                        v = cols[nm][keep_mask]
-                        base[f"{key}__{nm}"] = pd.Series(
-                            v, dtype=object if v.dtype == object else None
-                        )
-                else:
-                    outc: dict[str, list] = {nm: [] for nm in pnames}
-                    kept_rows: list[int] = []
-                    for i in idx:
-                        dec = decode_instruction_data(sig, bytes(data[i]))
-                        if dec is None:
-                            continue
-                        for nm in pnames:
-                            outc[nm].append(dec.get(nm))
-                        kept_rows.append(int(i))
-                    if not kept_rows:
-                        continue
-                    base = pdf.iloc[kept_rows][carry].reset_index(drop=True)
-                    base["_kind"] = key
-                    for nm in pnames:
-                        base[f"{key}__{nm}"] = pd.Series(outc[nm], dtype=object)
+                base = pdf.iloc[kept_rows][carry].reset_index(drop=True)
+                base["_kind"] = key
+                for nm in pnames:
+                    base[f"{key}__{nm}"] = pd.Series(outc[nm], dtype=object)
                 for col in all_prefixed:
                     if col not in base.columns:
                         base[col] = None

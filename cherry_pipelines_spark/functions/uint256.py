@@ -53,6 +53,36 @@ def _hex64(col: Column) -> Column:
     return F.when(F.length(col) <= 32, F.lpad(F.hex(col), 64, "0"))
 
 
+_DEC38_MAX = 10**38 - 1
+
+
+def dec38_sql(be_hex: str, digits: int, signed: bool) -> str:
+    """SQL: the integer held by ``be_hex`` (SQL for ``digits`` uppercase
+    big-endian hex digits, 32 or 64; two's complement when ``signed``)
+    as DECIMAL(38,0), NULL beyond ±(10^38-1) (overflow policy: SURVEY
+    §7.3).  The range checks compare fixed-width hex text, which orders
+    like the numbers, so decimal arithmetic only ever runs on values
+    that fit; the value is two ``conv`` halves of the low 32 digits."""
+    top = f"'{_DEC38_MAX:0{digits}X}'"
+
+    def value(h: str) -> str:  # h <= 10^38-1, so only the low 32 digits are set
+        return (
+            f"CAST(conv(substr({h}, {digits - 31}, 16), 16, 10) AS DECIMAL(38,0))"
+            f" * 18446744073709551616BD"
+            f" + CAST(conv(substr({h}, {digits - 15}, 16), 16, 10) AS DECIMAL(38,0))"
+        )
+
+    pos = f"IF({be_hex} <= {top}, {value(be_hex)}, NULL)"
+    if not signed:
+        return pos
+    # a negative v has v = -1 - ~v, and |v| <= 10^38-1 iff ~v < 10^38-1
+    # (a subtraction, not a unary minus: Spark negates a wide decimal
+    # through a 34-digit MathContext and would round it)
+    inv = f"translate({be_hex}, '0123456789ABCDEF', 'FEDCBA9876543210')"
+    neg = f"IF({inv} < {top}, -1 - ({value(inv)}), NULL)"
+    return f"IF(substr({be_hex}, 1, 1) < '8', {pos}, {neg})"
+
+
 def uint256_limbs(col: Column, prefix: str = "limb") -> list[Column]:
     """Four aliased Decimal(20,0) columns ``{prefix}0..{prefix}3``
     (limb 0 least-significant) from a 32-byte big-endian binary word.

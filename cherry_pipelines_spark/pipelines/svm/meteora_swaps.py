@@ -8,7 +8,7 @@ Note the indexing difference vs orca/raydium: the positional index is
 assigned AFTER filtering to only this program's swap|CPI instructions
 (meteora_swaps.py:201-208), so the CPI event is at index+1 within that
 filtered sequence.  As in orca and raydium, the decode is one pass:
-both kinds come out of one mapInPandas boundary in one frame, and the
+both kinds come out of it in one frame, and the
 pairing is a ``lead`` window over it, not a join of two branches.
 """
 
@@ -74,9 +74,9 @@ CPI_SIGNATURE = B.InstructionSignature(
 )
 
 
-# both kinds decode through ONE Arrow boundary (round-11 verdict #4:
-# meteora ran per-branch decode chains — 2 mapInPandas stages over the
-# same parent rows — while raydium/orca were already fused)
+# both kinds decode in ONE pass (round-11 verdict #4: meteora ran
+# per-branch decode chains — 2 decode stages over the same parent rows
+# — while raydium/orca were already fused)
 _MULTI_KINDS = [
     ("swaps", (CP_AMM_PROGRAM_ID,), SWAP_SIGNATURE),
     ("cpi", (CP_AMM_PROGRAM_ID,), CPI_SIGNATURE),
@@ -85,8 +85,7 @@ _MULTI_KINDS = [
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
     """meteora_swaps.py:190-254: filter to this program's swap|CPI rows
-    FIRST, then index, then decode both kinds through one mapInPandas
-    boundary.  Swaps and CPI events stay in the one ``decoded`` frame,
+    FIRST, then index, then decode both kinds in one pass.  Swaps and CPI events stay in the one ``decoded`` frame,
     which the process step reads in a single pass."""
     out = dict(bundle)
     keep = (F.col("program_id") == F.lit(CP_AMM_PROGRAM_ID)) & (

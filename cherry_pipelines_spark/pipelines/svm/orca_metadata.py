@@ -2,8 +2,8 @@
 /root/reference/src/cherry_pipelines/svm/orca_metadata.py: two
 initialize_pool instruction versions, typed-NULL padded union, tx/block
 joins, single output table (no anchor, no token balances).  Both
-versions decode in one mapInPandas pass, and the union is one
-projection over that fused frame.
+versions decode in one pass, and the union is one projection over
+that fused frame.
 
 The v2 signature has 14 account names, so token_program_a (index 10)
 onward map through ``rest_of_accounts`` — exercised here for real.
@@ -80,9 +80,9 @@ _SHARED = (
 )
 
 
-# both versions decode through ONE Arrow boundary (round-11 verdict
-# #4: the v1/v2 branches ran separate mapInPandas stages over the same
-# parent rows); the multi dispatcher's program+discriminator routing
+# both versions decode in ONE pass (round-11 verdict #4: the v1/v2
+# branches ran separate decode stages over the same parent rows); the
+# multi dispatcher's program+discriminator routing
 # subsumes the reference's split filters exactly (orca_metadata.py:
 # 147-165)
 _MULTI_KINDS = [
@@ -141,7 +141,7 @@ def build_pipeline(
         sort_within_partitions={TABLE_NAME: ("whirlpool",)},
     )
     steps = [
-        # split + decode fused into one step (one Arrow boundary for
+        # split + decode fused into one step (one decode pass for
         # both init versions — see decode_step)
         PyStep(decode_step, name="svm_decode_instructions"),
         PyStep(process_step, name="process_data"),

@@ -111,10 +111,10 @@ SIGNATURE_V2 = B.InstructionSignature(
 )
 
 # fused dispatch spec (orca_swaps.py:223-265): two swap shapes + two
-# transfer shapes through ONE Arrow boundary.  remaining_accounts_info
-# (the one variable-width v2 param) is decoded then dropped by the
-# reference too — skipping it keeps v2 on the vectorized fixed-width
-# fast path (drop_params slot of the kind tuple)
+# transfer shapes decoded in one pass.  remaining_accounts_info (the
+# one variable-width v2 param) is decoded then dropped by the reference
+# too — skipping it keeps every kind fixed-width, so the decode is SQL
+# (drop_params slot of the kind tuple)
 _SWAP_KINDS = [
     ("swaps_v1", (PROGRAM_ID,), SIGNATURE_V1),
     ("swaps_v2", (PROGRAM_ID,), SIGNATURE_V2, ("remaining_accounts_info",)),
@@ -166,8 +166,7 @@ def _swaps(decoded: DataFrame) -> DataFrame:
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
     """Memo-filter → positional index → discriminator dispatch →
-    decode, fused into one mapInPandas boundary (see
-    raydium_swaps.decode_step).  Swaps and transfers stay in the one
+    decode, fused into one pass (see raydium_swaps.decode_step).  Swaps and transfers stay in the one
     ``decoded`` frame, which every later step reads in a single pass."""
     from cherry_pipelines_spark.functions.borsh import decode_instructions_multi
 
@@ -221,7 +220,7 @@ def build_pipeline(
         },
     )
     steps = [
-        # split + decode fused into one Arrow boundary (see decode_step)
+        # split + decode fused into one pass (see decode_step)
         PyStep(decode_step, name="svm_decode_instructions"),
         PyStep(process_step, name="process_data"),
     ]

@@ -193,8 +193,8 @@ def _swaps(decoded: DataFrame) -> DataFrame:
 
 
 # the fused dispatch spec: six swap kinds + two transfer kinds decoded
-# through ONE Arrow boundary (functions/borsh.py:
-# decode_instructions_multi) instead of eight — the round-10 PIPEBENCH
+# in ONE pass (functions/borsh.py: decode_instructions_multi) instead
+# of eight Arrow boundaries — the round-10 PIPEBENCH
 # gap between raydium (44k instr/s, 10 boundaries) and meteora
 # (152k instr/s, 2 boundaries) attributed to exactly this
 _SWAP_KINDS = [(key, (program,), sig) for key, program, _disc, sig in _KINDS]
@@ -203,9 +203,9 @@ _MULTI_KINDS = _SWAP_KINDS + C.TRANSFER_KINDS
 
 def decode_step(bundle: TableBundle, ctx) -> TableBundle:
     """raydium_swaps.py:309-374: memo-filter → index → 6-way swap
-    dispatch + transfers → decode, fused: the discriminator dispatch
-    happens INSIDE one mapInPandas batch (per-sub-batch vectorized
-    kernels), and swaps and transfers stay in the one ``decoded``
+    dispatch + transfers → decode, fused: every kind decodes in one
+    SQL pass (each row tagged with its kinds), and swaps and
+    transfers stay in the one ``decoded``
     frame, which every later step reads in a single pass.  Per-kind
     results are schema- and value-identical to the per-branch
     decode_instructions_df chain (pinned by the differential pytest)."""
@@ -255,8 +255,8 @@ def build_pipeline(
         },
     )
     steps = [
-        # split + decode are FUSED into one step (one Arrow boundary
-        # for all ten discriminator branches — see decode_step)
+        # split + decode are FUSED into one step (one decode pass for
+        # all ten discriminator branches — see decode_step)
         PyStep(decode_step, name="svm_decode_instructions"),
         PyStep(process_step, name="process_data"),
     ]

@@ -311,3 +311,110 @@ def test_dynamic_trailing_byte_rejected(ev):
     sig, topics, data = _build_dyn(typs, indexed, vals)
     assert abi.decode_event_row(sig, topics, data + bytes(1)) is None
     assert abi.decode_event_row(sig, topics, data + bytes(32)) is None
+
+
+# ----------------------------------------------------------- Spark static path
+# every static width: uint8..uint256, int8..int256, bytes1..bytes32, plus
+# address and bool; each signature fills the three topics its own way
+_STATIC_SIGS = (
+    "U(uint256 indexed ta, uint8 indexed tb, "
+    + ", ".join(f"uint{8 * k} u{k}" for k in range(1, 33)) + ")",
+    "I(int64 indexed ta, int256 indexed tb, int8 indexed tc, "
+    + ", ".join(f"int{8 * k} i{k}" for k in range(1, 33)) + ")",
+    "B(address indexed ta, "
+    + ", ".join(f"bytes{k} b{k}" for k in range(1, 33)) + ", bool z, address a)",
+    "M(address a, bool b, uint256 c, int128 d)",
+)
+
+
+def _static_word(rng, typ: str) -> bytes:
+    """A random 32-byte word for ``typ``: mostly canonical, at range
+    and sign edges, sometimes with dirty padding."""
+    if typ == "address":
+        w = bytes(12) + rng.randbytes(20)
+    elif typ == "bool":
+        w = bytes(31) + bytes([rng.choice((0, 1, 2, 255))])
+    elif typ.startswith("bytes"):
+        n = int(typ[5:])
+        w = rng.randbytes(n) + bytes(32 - n)
+    else:
+        signed = typ.startswith("int")
+        bits = int(typ[3:] if signed else typ[4:])
+        lo, hi = (-(2 ** (bits - 1)), 2 ** (bits - 1) - 1) if signed else (0, 2**bits - 1)
+        edges = [lo, hi, 0, rng.randint(lo, hi), 10**38 - 1, 10**38, -(10**38 - 1), -(10**38)]
+        if signed:
+            edges.append(-1)
+        v = rng.choice([e for e in edges if lo <= e <= hi])
+        w = v.to_bytes(32, "big", signed=signed)
+    if rng.random() < 0.08:  # dirty: any byte of the word may change
+        i = rng.randrange(32)
+        w = w[:i] + bytes([w[i] ^ (1 << rng.randrange(8))]) + w[i + 1 :]
+    return w
+
+
+def _static_rows(rng, sig, n: int):
+    idx = [p for p in sig.params if p.indexed]
+    rows = []
+    for i in range(n):
+        topics = [_static_word(rng, p.type) for p in idx] + [None] * (3 - len(idx))
+        data = b"".join(_static_word(rng, p.type) for p in sig.params if not p.indexed)
+        mode = rng.randrange(12)
+        if mode == 0 and idx:
+            topics[rng.randrange(len(idx))] = None  # missing topic
+        elif mode == 1 and idx:
+            k = rng.randrange(len(idx))
+            topics[k] = topics[k][:31]  # short topic
+        elif mode == 2 and len(idx) < 3:
+            topics[rng.randrange(len(idx), 3)] = rng.randbytes(32)  # extra topic
+        elif mode == 3:
+            data += b"\x00"  # trailing byte
+        elif mode == 4:
+            data = data[:-32]  # one word short
+        elif mode == 5:
+            data = None
+        rows.append((i, *topics, data))
+    return rows
+
+
+def _static_expect(sig, topics, data):
+    """decode_event_row under the static topic rule: every topic past
+    the indexed ones must be NULL (the row decoder checks the first)."""
+    n_idx = sum(p.indexed for p in sig.params)
+    if any(t is not None for t in topics[n_idx:]):
+        return None
+    return abi.decode_event_row(sig, [None, *topics], data)
+
+
+@_pytest.mark.parametrize("allow", [True, False], ids=["allow_fail", "strict"])
+def test_static_sql_decode_matches_row_decoder(spark, allow):
+    """The Spark decode of an all-static signature (SQL expressions)
+    agrees with decode_event_row on every row: values, NULLs and
+    <name>_raw words; failing rows NULL when ``allow_decode_fail``,
+    dropped otherwise."""
+    import random
+
+    rng = random.Random(20251019)
+    norm = lambda v: bytes(v) if isinstance(v, (bytes, bytearray)) else v  # noqa: E731
+    for sig_str in _STATIC_SIGS:
+        sig = abi.parse_event_signature(sig_str)
+        names = abi.output_schema(sig).fieldNames()
+        rows = _static_rows(rng, sig, 160)
+        df = spark.createDataFrame(
+            rows, "row_id long, topic1 binary, topic2 binary, topic3 binary, data binary"
+        )
+        got = {
+            r["row_id"]: {k: norm(r[k]) for k in names}
+            for r in abi.decode_events_df(df, sig_str, allow_decode_fail=allow).collect()
+        }
+        n_ok = 0
+        for row_id, t1, t2, t3, data in rows:
+            want = _static_expect(sig, [t1, t2, t3], data)
+            n_ok += want is not None
+            if want is None:
+                if allow:
+                    assert got[row_id] == dict.fromkeys(names), (sig.name, row_id)
+                else:
+                    assert row_id not in got, (sig.name, row_id)
+            else:
+                assert got[row_id] == {k: norm(want.get(k)) for k in names}, (sig.name, row_id)
+        assert 0 < n_ok < len(rows), sig.name  # both outcomes exercised

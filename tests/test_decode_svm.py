@@ -150,11 +150,13 @@ def test_rest_of_accounts(spark):
 
 
 def test_fixed_fast_path_differential(spark):
-    """The vectorized fixed-width fast path must agree row-for-row with
-    the per-row reader across all fixed kinds and failure modes: bad
-    bool byte / bad enum index (row dropped), u64 > int64 max and u128
+    """The fixed-width SQL decode must agree row-for-row with the
+    per-row reader across all fixed kinds and failure modes: bad bool
+    byte / bad enum index (row dropped), u64 > int64 max and u128
     overflow (NULL value), short buffer (dropped), trailing bytes
-    (ignored)."""
+    (ignored), and every int at its range and sign-bit edges.  The same
+    rows go through decode_instructions_multi with a second kind of the
+    same discriminator, so each row decodes under both kinds."""
     import random
 
     rng = random.Random(777)
@@ -172,26 +174,52 @@ def test_fixed_fast_path_differential(spark):
             B.ParamInput("i_bool", B.Bool()),
             B.ParamInput("j_enum", B.Enum(("x", "y", "z"))),
             B.ParamInput("k_bytes", B.FixedArray(B.U8(), 5)),
+            B.ParamInput("l_i16", B.I16()),
+            B.ParamInput("m_i32", B.I32()),
         ),
         accounts_names=(),
     )
-    width = 1 + 2 + 4 + 8 + 16 + 1 + 8 + 16 + 1 + 1 + 5
+    # offset (after the discriminator), width and signedness per int
+    ints = {
+        name: (off, w, signed)
+        for name, off, w, kind, signed in B._fixed_layout(sig.params)
+        if kind in ("uint", "int", "u64", "u128", "i128")
+    }
+    width = sum(e[2] for e in B._fixed_layout(sig.params))
+    boff = ints["h_i128"][0] + 16  # bool offset; the enum follows it
+    edges = {
+        "d_u64": [0, 2**63 - 1, 2**63, 2**64 - 1],
+        "e_u128": [0, 10**38 - 1, 10**38, 2**128 - 1],
+        "h_i128": [10**38 - 1, 10**38, -(10**38 - 1), -(10**38), -(2**127), 2**127 - 1, -1],
+        "f_i8": [-128, -1, 0, 127],
+        "l_i16": [-(2**15), -1, 2**15 - 1],
+        "m_i32": [-(2**31), -1, 2**31 - 1],
+        "g_i64": [-(2**63), -1, 2**63 - 1],
+        "a_u8": [255],
+        "b_u16": [2**16 - 1],
+        "c_u32": [2**32 - 1],
+    }
+
+    def valid_body():
+        body = bytearray(rng.randbytes(width))
+        body[boff] = rng.randint(0, 1)
+        body[boff + 1] = rng.randint(0, 2)
+        return body
 
     rows = []
     for i in range(300):
         body = bytearray(rng.randbytes(width))
         mode = i % 6
-        boff = 1 + 2 + 4 + 8 + 16 + 1 + 8 + 16  # bool offset
         if mode == 0:
-            body[boff] = rng.randint(0, 1)
-            body[boff + 1] = rng.randint(0, 2)  # valid bool+enum
+            body = valid_body()
         elif mode == 1:
             body[boff] = rng.randint(2, 255)  # bad bool -> dropped
         elif mode == 2:
             body[boff] = 1
             body[boff + 1] = rng.randint(3, 255)  # bad enum -> dropped
         elif mode == 3:  # u64 overflow -> NULL value
-            body[1 + 2 + 4 : 1 + 2 + 4 + 8] = (2**63 + i).to_bytes(8, "little")
+            off, w, _ = ints["d_u64"]
+            body[off : off + w] = (2**63 + i).to_bytes(8, "little")
             body[boff] = 0
             body[boff + 1] = 0
         data = b"\x2a" + bytes(body)
@@ -199,23 +227,70 @@ def test_fixed_fast_path_differential(spark):
             data = data[: rng.randint(1, width)]  # short buffer -> dropped
         elif mode == 5:
             data = data + rng.randbytes(3)  # trailing -> ignored
-        rows.append((i, data))
+        rows.append(data)
+    for name, values in edges.items():
+        off, w, signed = ints[name]
+        for v in values:
+            body = valid_body()
+            body[off : off + w] = v.to_bytes(w, "little", signed=signed)
+            rows.append(b"\x2a" + bytes(body))
+    rows = list(enumerate(rows))
+
+    def norm(d):
+        return {k: (bytes(v) if isinstance(v, (bytes, bytearray)) else v) for k, v in d.items()}
+
+    def check(sig, got):
+        for i, data in rows:
+            expect = B.decode_instruction_data(sig, data)
+            if expect is None:
+                assert i not in got, f"row {i} should be dropped"
+            else:
+                assert i in got, f"row {i} should be kept"
+                assert norm(got[i]) == norm(expect), f"row {i}: {got[i]} != {expect}"
 
     df = spark.createDataFrame(rows, "row_id long, data binary")
-    got = {
+    check(sig, {
         r["row_id"]: {p.name: r[p.name] for p in sig.params}
         for r in B.decode_instructions_df(df, sig, passthrough=("row_id",)).collect()
+    })
+
+    # a second kind of the same discriminator and program reads other
+    # offsets and widths; its bool is the first kind's, so every valid
+    # row of the first kind decodes under both
+    other = B.InstructionSignature(
+        discriminator=b"\x2a",
+        params=(
+            B.ParamInput("s_i16", B.I16()),
+            B.ParamInput("t_u128", B.U128()),
+            B.ParamInput("w_i128", B.I128()),
+            B.ParamInput("u_i32", B.I32()),
+            B.ParamInput("x_bytes", B.FixedArray(B.U8(), boff - 38)),
+            B.ParamInput("v_bool", B.Bool()),
+        ),
+        accounts_names=(),
+    )
+    prog = b"P" * 32
+    kinds = [("main", (prog,), sig), ("other", (prog,), other)]
+    fused = B.decode_instructions_multi(
+        df.selectExpr("row_id", f"X'{prog.hex()}' AS program_id", "data"),
+        kinds,
+        passthrough=("row_id",),
+    ).collect()
+    for key, _p, ksig in kinds:
+        got = {
+            r["row_id"]: {p.name: r[f"{key}__{p.name}"] for p in ksig.params}
+            for r in fused if r["_kind"] == key
+        }
+        check(ksig, got)
+    both = {r["row_id"] for r in fused if r["_kind"] == "main"} & {
+        r["row_id"] for r in fused if r["_kind"] == "other"
     }
-    for i, data in rows:
-        expect = B.decode_instruction_data(sig, data)
-        if expect is None:
-            assert i not in got, f"row {i} should be dropped"
-        else:
-            assert i in got, f"row {i} should be kept"
-            norm = {k: (bytes(v) if isinstance(v, bytearray) else v) for k, v in got[i].items()}
-            exp = {k: (bytes(v) if isinstance(v, (bytes, bytearray)) else v) for k, v in expect.items()}
-            norm = {k: (bytes(v) if isinstance(v, (bytes, bytearray)) else v) for k, v in norm.items()}
-            assert norm == exp, f"row {i}: {norm} != {exp}"
+    assert len(both) > 50
+    # a row decodes under each of its kinds with the other kind's columns NULL
+    for r in fused:
+        absent = other if r["_kind"] == "main" else sig
+        key = "other" if r["_kind"] == "main" else "main"
+        assert all(r[f"{key}__{p.name}"] is None for p in absent.params)
 
 
 def test_drop_params_suffix_skip(spark):

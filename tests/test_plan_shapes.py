@@ -86,11 +86,17 @@ def test_text_ops_stay_jvm_side(spark, sf_dir, queries):
 
 
 def test_decoders_are_arrow_batched(spark, sf_dir, queries):
-    # the decode boundary is mapInPandas (Arrow), never row-at-a-time
+    # fixed-width decodes (static ABI, fixed borsh) are Catalyst
+    # expressions: no Python node at all
     for name in ("evm_decode", "borsh_decode"):
         plan = plan_of(queries[name](spark, sf_dir))
-        assert "MapInPandas" in plan, name
-        assert "BatchEvalPython" not in plan, name
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (name, node)
+    # a dynamic ABI signature decodes through one mapInPandas (Arrow),
+    # never row-at-a-time
+    plan = plan_of(queries["evm_decode_batch"](spark, sf_dir))
+    assert plan.count("MapInPandas (") == 1, plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_stratified_sample_is_map_only(spark, sf_dir, queries):

@@ -1,7 +1,7 @@
 """Shape of one tail poll of the SVM pipelines on the SVM fixtures,
 counted in Spark jobs per phase (job groups): the tip probe, the
 checkpoint read and the source load run none, and the batch write is
-one pass over one Python decode.  Also pins the swap tables' output
+one pass with no Python decode.  Also pins the swap tables' output
 schemas."""
 
 from __future__ import annotations
@@ -70,9 +70,7 @@ def job_group(spark):
 def tail_sources(spark, tmp_path_factory):
     """Source dirs holding the history file and the landed increments,
     the layout a chain-tip follower polls.  The tail lands in as many
-    increments as make the scan read as already parallel, so the
-    decode's fan-out (operators.text.fan_out) adds no repartition on
-    any core count."""
+    increments as make the scan read as already parallel."""
     d = tmp_path_factory.mktemp("tail_poll")
     _, paths = gen_svm_fixtures(str(d / "gen"), n_slots=N_SLOTS)
     n_inc = max(1, spark.sparkContext.defaultParallelism // 2 - 1)
@@ -116,14 +114,27 @@ def _walk(plan):
             stack.append(it.next())
 
 
-def _python_decodes(plan) -> int:
-    return sum(n.getClass().getSimpleName() == "MapInPandasExec" for n in _walk(plan))
+_PYTHON_NODES = {"MapInPandasExec", "ArrowEvalPythonExec", "BatchEvalPythonExec"}
+
+
+def _python_nodes(plan) -> int:
+    return sum(n.getClass().getSimpleName() in _PYTHON_NODES for n in _walk(plan))
+
+
+def _has_decode(plan) -> bool:
+    """True when a node of ``plan`` outputs the fused decode's ``_kind``."""
+    for n in _walk(plan):
+        it = n.output().iterator()
+        while it.hasNext():
+            if it.next().name() == "_kind":
+                return True
+    return False
 
 
 # (pipeline, most Spark jobs its batch write may run)
 @pytest.mark.parametrize(
     "module, max_write_jobs",
-    [(orca, 7), (met, 7), (meta, 4)],
+    [(orca, 6), (met, 5), (meta, 3)],
     ids=["orca", "meteora", "orca_metadata"],
 )
 def test_tail_poll_runs_only_the_write_jobs(spark, tail_sources, tmp_path, module,
@@ -152,14 +163,47 @@ def test_tail_poll_runs_only_the_write_jobs(spark, tail_sources, tmp_path, modul
     plan = table._jdf.queryExecution().executedPlan()
     text = plan.toString()
     assert "InMemoryRelation" not in text and "InMemoryTableScan" not in text
-    assert _python_decodes(plan) == 1
+    assert _python_nodes(plan) == 0
+    assert _has_decode(plan)
     for node in _walk(plan):
         if node.getClass().getSimpleName().endswith("JoinExec"):
             sides = node.children().iterator()
             with_decode = 0
             while sides.hasNext():
-                with_decode += _python_decodes(sides.next()) > 0
+                with_decode += _has_decode(sides.next())
             assert with_decode <= 1, node.toString()
+
+
+def _exchanges(plan, partitioning: str) -> set[int]:
+    """Ids of the shuffle exchanges in ``plan`` that partition by
+    ``partitioning`` (a Catalyst Partitioning class name)."""
+    return {
+        n.id() for n in _walk(plan)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and n.outputPartitioning().getClass().getSimpleName() == partitioning
+    }
+
+
+@pytest.mark.parametrize("module", [orca, met], ids=["orca", "meteora"])
+def test_swap_write_plan_decodes_in_one_shuffle(spark, tail_sources, tmp_path, module):
+    """The swap table a batch writes decodes in the JVM: no Python node,
+    no round-robin spread, and the positional-index window below the
+    decode and the adjacency window above it share one hash shuffle."""
+    pipe = _pipeline(module, tail_sources, str(tmp_path / "sink"))
+    bundle = pipe.source.read(spark, 0, N_SLOTS)
+    ctx = PipelineContext(0, N_SLOTS)
+    for step in pipe.steps:
+        bundle = step.run(spark, bundle, ctx)
+    table = bundle[module.TABLE_NAME]
+    table.collect()
+    plan = table._jdf.queryExecution().executedPlan()
+    assert _python_nodes(plan) == 0
+    assert _exchanges(plan, "RoundRobinPartitioning") == set()
+    windows = [n for n in _walk(plan) if n.getClass().getSimpleName() == "WindowExec"]
+    assert len(windows) == 2, plan.toString()
+    assert len(set().union(*(_exchanges(w, "HashPartitioning") for w in windows))) == 1, (
+        plan.toString()
+    )
 
 
 @pytest.mark.parametrize("module", [orca, ray], ids=["orca", "raydium"])
