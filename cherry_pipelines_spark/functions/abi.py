@@ -23,10 +23,11 @@ The entry point is :func:`decode_events_df`.  An all-static signature
 (every param one 32-byte word, e.g. ERC-20 ``Transfer``) decodes as
 Spark SQL text (:func:`_static_sql`): word offsets are constants, so
 each param is a ``substring`` of its topic or the data, and each int a
-``conv`` of its hex.  It runs as codegen'd Catalyst expressions with no
-Python worker.  A signature with a dynamic param decodes in an
-Arrow-batched ``mapInPandas`` over the byte blobs, vectorized with
-numpy (cumulative-offset tail arithmetic + fancy-indexed byte gathers —
+``conv`` of the hex of its word's low bytes.  It runs as codegen'd
+Catalyst expressions with no Python worker.  A signature with a
+dynamic param decodes in an Arrow-batched ``mapInPandas`` over the
+byte blobs, vectorized with numpy (cumulative-offset tail
+arithmetic + fancy-indexed byte gathers —
 the canonical tightly-packed layout makes every position derivable
 without a per-row walk), with the per-row tail walk kept as the
 differential-pinned reference path.
@@ -43,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from cherry_pipelines_spark.functions.uint256 import dec38_sql
+from cherry_pipelines_spark.functions.uint256 import dec38_word_sql
 
 _DEC38_MAX = 10**38 - 1
 
@@ -496,40 +497,38 @@ def _vec_elem_decoder(base: str):
 
 def _static_sql(
     sig: EventSignature, topic_cols: tuple[str, ...], data_col: str
-) -> tuple[list[tuple[str, str]], str, list[tuple[str, str, str]]]:
+) -> tuple[str, list[tuple[str, str, str]]]:
     """The decode of an all-static ``sig`` as Spark SQL text:
-    ``(hexes, ok, cols)``.
+    ``(ok, cols)``.
 
-    * ``hexes``: ``(name, SQL)`` of the hex text the int params read, one
-      per topic or data blob they read.
     * ``ok`` holds for a log that decodes: each indexed param's topic is
       32 bytes, every later topic is NULL, the data is exactly one word
       per other param, and each address, uint and intN word is padded as
       the ABI encodes it (zeros; the sign for intN).  It reads only the
       binary columns.
     * ``cols``: ``(name, SQL, type)`` per output column, over the binary
-      columns and ``hexes``; ``<name>_raw`` follows each wide int.
+      columns; ``<name>_raw`` follows each wide int.  An int is a
+      ``conv`` of the hex of its word's low bytes.
 
     Values match :func:`_decode_word`: wide ints are DECIMAL(38,0), NULL
     beyond ±(10^38-1), with the word kept raw."""
     n_indexed = sum(p.indexed for p in sig.params)
     if n_indexed > len(topic_cols):  # a topic is always missing
-        return [], "false", [
+        return "false", [
             (f.name, "NULL", f.dataType.simpleString()) for f in output_schema(sig).fields
         ]
     data = f"`{data_col}`"
     checks = [f"length(`{t}`) = 32" for t in topic_cols[:n_indexed]]
     checks += [f"`{t}` IS NULL" for t in topic_cols[n_indexed:]]
     checks.append(f"coalesce(length({data}), 0) = {32 * (len(sig.params) - n_indexed)}")
-    hexes: dict[str, str] = {}
     cols: list[tuple[str, str, str]] = []
     ti = di = 0
     for p in sig.params:
         if p.indexed:
-            word, src, pos = f"`{topic_cols[ti]}`", f"_hex_t{ti}", 1
+            word = f"`{topic_cols[ti]}`"
             ti += 1
         else:
-            word, src, pos = f"substring({data}, {32 * di + 1}, 32)", "_hex_d", 64 * di + 1
+            word = f"substring({data}, {32 * di + 1}, 32)"
             di += 1
         typ = spark_type_for(p.type).simpleString()
         if p.type == "address":
@@ -551,18 +550,16 @@ def _static_sql(
         elif not unsigned and lead:  # sign-extended: lead bytes copy the top bit
             head = f"substring({word}, 1, {lead + 1})"
             checks.append(f"({head} <= X'{'00' * lead}7F' OR {head} >= X'{'FF' * lead}80')")
-        hexes.setdefault(src, f"hex({word if p.indexed else data})")
-        wh = f"`{src}`" if p.indexed else f"substr(`{src}`, {pos}, 64)"
         if not _wide_uint(p.type):  # uint <= 32 or int <= 64: a long
             sql = (
-                f"conv(substr({wh}, 57, 8), 16, 10)" if unsigned
-                else f"conv(substr({wh}, 49, 16), 16, -10)"
+                f"conv(hex(substring({word}, 29, 4)), 16, 10)" if unsigned
+                else f"conv(hex(substring({word}, 25, 8)), 16, -10)"
             )
             cols.append((p.name, sql, typ))
             continue
-        cols.append((p.name, dec38_sql(wh, 64, not unsigned), typ))
+        cols.append((p.name, dec38_word_sql(word, not unsigned), typ))
         cols.append((f"{p.name}_raw", word, "binary"))
-    return list(hexes.items()), " AND ".join(checks), cols
+    return " AND ".join(checks), cols
 
 
 def decode_event_row(
@@ -600,11 +597,10 @@ def decode_events_df(
     out_fields = output_schema(sig)
     passthrough = [c for c in logs.columns if c not in (*topic_cols, data_col)]
     if not any(_is_dynamic(p.type) for p in sig.params):
-        hexes, ok, cols = _static_sql(sig, topic_cols, data_col)
+        ok, cols = _static_sql(sig, topic_cols, data_col)
         pq = [f"`{c}`" for c in passthrough]
         src = logs.selectExpr(
-            *pq, *[f"`{c}`" for c in (*topic_cols, data_col)],
-            *[f"{sql} AS `{name}`" for name, sql in hexes], f"{ok} AS `_ok`",
+            *pq, *[f"`{c}`" for c in (*topic_cols, data_col)], f"{ok} AS `_ok`"
         )
         if allow_decode_fail:  # a row that fails keeps NULL decoded columns
             return src.selectExpr(

@@ -83,6 +83,31 @@ def dec38_sql(be_hex: str, digits: int, signed: bool) -> str:
     return f"IF(substr({be_hex}, 1, 1) < '8', {pos}, {neg})"
 
 
+def dec38_word_sql(word: str, signed: bool) -> str:
+    """SQL: :func:`dec38_sql` read straight from ``word``, SQL for a
+    32-byte big-endian binary word.  The range checks compare the word
+    with the 32-byte bounds (binary order is unsigned, like the
+    numbers), and the value is two ``conv`` of the hex of 8-byte
+    slices, so no hex text of the whole word is built or scanned."""
+
+    def value(inv: bool) -> str:  # of the word, or of ~word when inv
+        def half(at: int) -> str:
+            h = f"hex(substring({word}, {at}, 8))"
+            if inv:
+                h = f"translate({h}, '0123456789ABCDEF', 'FEDCBA9876543210')"
+            return f"CAST(conv({h}, 16, 10) AS DECIMAL(38,0))"
+
+        return f"{half(17)} * 18446744073709551616BD + {half(25)}"
+
+    pos = f"IF({word} <= X'{_DEC38_MAX:064X}', {value(False)}, NULL)"
+    if not signed:
+        return pos
+    # a negative v has v = -1 - ~v, and v >= -(10^38-1) iff its word is
+    # at least the two's complement of -(10^38-1)
+    neg = f"IF({word} >= X'{2**256 - _DEC38_MAX:064X}', -1 - ({value(True)}), NULL)"
+    return f"IF(substring({word}, 1, 1) < X'80', {pos}, {neg})"
+
+
 def uint256_limbs(col: Column, prefix: str = "limb") -> list[Column]:
     """Four aliased Decimal(20,0) columns ``{prefix}0..{prefix}3``
     (limb 0 least-significant) from a 32-byte big-endian binary word.
