@@ -3421,8 +3421,8 @@ def q_evm_decode_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The source is fanned out BEFORE the synthesis select: the sf0.1
     orders table is one parquet partition, so without it the whole
-    string build serializes on one core and the decoder's own fan_out
-    only parallelizes the Python stage (measured 1.96 -> 1.32 s)."""
+    string build and the SQL decode run on one core (measured
+    1.96 -> 1.32 s when the decode was a Python stage)."""
     from cherry_pipelines_spark.functions.abi import decode_events_df
     from cherry_pipelines_spark.operators.text import fan_out
 

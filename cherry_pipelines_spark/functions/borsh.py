@@ -382,8 +382,8 @@ def decode_instructions_df(
     param_names = [p.name for p in sig.params]
 
     def mapper(batches):
-        # column-wise accumulation (same pattern as abi.decode_events_df):
-        # the per-row loop touches only the data blob, never row dicts
+        # column-wise accumulation: the per-row loop touches only the
+        # data blob, never row dicts
         for pdf in batches:
             data_arr = pdf[data_col].to_numpy()
             out_cols: dict[str, list] = {name: [] for name in param_names}

@@ -1,13 +1,14 @@
-"""Differential suite for the VECTORIZED dynamic ABI decode path
-(``decode_events_df``'s ``mapper_dyn``): for signatures whose dynamic
-params are uintN[] arrays, ``bytes`` blobs, or ``string``s, the
-offset-table numpy decoder must be byte-identical to the per-row
-reference decoder (``row_mapper``, pinned via ``_force_row_path=True``)
-on well-formed AND adversarial payloads — short data, non-canonical /
-gapped / out-of-bounds offsets, oversized lengths, dirty element
-padding, >10^38-1 elements (element-NULL, row kept), missing / extra
-topics, NULL and empty data, trailing bytes, invalid utf-8 in string
-params (row-NULL), dirty-but-accepted blob pad bytes."""
+"""Differential suite for the Spark decode of dynamic ABI signatures
+(``decode_events_df``, generated SQL): for signatures whose dynamic
+params are ``T[]`` arrays, ``bytes`` blobs or ``string``s, every row
+must decode exactly as the per-row reference ``decode_event_row`` does,
+in both ``allow_decode_fail`` modes, on well-formed AND adversarial
+payloads — short data, non-canonical / gapped / out-of-bounds offsets,
+oversized lengths (beyond 2^63, or wrapping 64 bits when multiplied by
+32), dirty element padding, >10^38-1 elements (element-NULL, row kept),
+missing / extra / gapped topics, NULL and empty data, trailing bytes,
+invalid utf-8 in string params (row-NULL), dirty-but-accepted blob pad
+bytes."""
 
 from __future__ import annotations
 
@@ -101,6 +102,16 @@ def _adversarial_rows():
         (16, t(1), t(2), t(3),
          _w(64) + _w(64 + 32 * 2) + _enc_uint_arr([9])
          + _enc_uint_arr([1, 2, 3])),
+        # 17: length word >= 2^63
+        (17, t(1), t(2), t(3),
+         _w(64) + _w(64 + 32) + _w(2**63) + _enc_uint_arr([7, 8])),
+        # 18: length word 2^59, whose 32 * len wraps 64 bits to 0: the
+        #     tails would look tightly packed if the size wrapped
+        (18, t(1), t(2), t(3),
+         _w(64) + _w(64 + 32) + _w(2**59) + _enc_uint_arr([7, 8])),
+        # 19: length word 2^59 + 1, whose 32 * len wraps to 32
+        (19, t(1), t(2), t(3),
+         _w(64) + _w(64 + 64) + _w(2**59 + 1) + _w(5) + _enc_uint_arr([7, 8])),
     ]
     return rows
 
@@ -116,27 +127,40 @@ _LOG_SCHEMA = T.StructType(
 )
 
 
-def _norm(rows):
-    out = []
-    for r in rows:
-        d = r.asDict(recursive=True)
-        out.append(tuple(sorted((k, repr(v)) for k, v in d.items())))
-    return sorted(out)
+def _norm(v):
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    if isinstance(v, list):
+        return [_norm(x) for x in v]
+    return v
 
 
 def _assert_paths_agree(spark, rows, sig):
-    from cherry_pipelines_spark.functions.abi import decode_events_df
+    """``decode_events_df`` agrees with ``decode_event_row`` on every
+    row: values and NULLs; a failing row keeps NULL decoded columns when
+    ``allow_decode_fail``, and is dropped otherwise.  Returns the
+    ``allow_decode_fail=True`` rows."""
+    from cherry_pipelines_spark.functions import abi
 
+    parsed = abi.parse_event_signature(sig)
+    names = abi.output_schema(parsed).fieldNames()
+    want = {
+        i: abi.decode_event_row(parsed, [None, t1, t2, t3], data)
+        for i, t1, t2, t3, data in rows
+    }
     df = spark.createDataFrame(rows, _LOG_SCHEMA)
     kept = None
     for allow in (True, False):
-        fast = decode_events_df(df, sig, allow_decode_fail=allow).collect()
-        slow = decode_events_df(
-            df, sig, allow_decode_fail=allow, _force_row_path=True
-        ).collect()
-        assert _norm(fast) == _norm(slow)
+        out = abi.decode_events_df(df, sig, allow_decode_fail=allow).collect()
+        got = {r["log_index"]: {k: _norm(r[k]) for k in names} for r in out}
+        expect = {
+            i: dict.fromkeys(names) if w is None else {k: _norm(w.get(k)) for k in names}
+            for i, w in want.items()
+            if allow or w is not None
+        }
+        assert got == expect, sig
         if allow:
-            kept = fast
+            kept = out
     return kept
 
 
@@ -157,9 +181,8 @@ def test_vectorized_matches_row_path_adversarial(spark):
     # overflow element: ids[0] NULL, values[0] kept
     assert by_idx[15]["ids"] == [None]
     assert by_idx[15]["values"][0] is not None
-    # asymmetric lengths decode exactly (the sole content check the
-    # fast==slow differential can't cover: a bounds bug shared by both
-    # paths would slip a purely-differential assert)
+    # asymmetric lengths decode exactly (a bounds bug shared by the SQL
+    # decode and the row decoder would slip a purely-differential assert)
     assert by_idx[16]["ids"] == [9]
     assert by_idx[16]["values"] == [1, 2, 3]
     assert by_idx[14]["ids"] == []
@@ -189,6 +212,7 @@ def test_vectorized_mixed_static_and_dynamic(spark):
         (0, t(1), None, None, ok),
         (1, t(1), None, None, dirty),
         (2, t(1), t(2), None, ok),   # extra topic2 -> fail
+        (3, t(1), None, t(3), ok),   # gapped: topic3 set past a NULL -> fail
     ]
     out = _assert_paths_agree(spark, rows, SIG_MIXED)
     by_idx = {r["log_index"]: r for r in out}
@@ -197,6 +221,7 @@ def test_vectorized_mixed_static_and_dynamic(spark):
     assert by_idx[0]["nonce"] == 7
     assert by_idx[1]["small"] is None
     assert by_idx[2]["small"] is None
+    assert by_idx[3]["small"] is None
 
 
 def test_vectorized_no_topics_small_bits(spark):
@@ -214,7 +239,7 @@ def test_vectorized_fuzz_mutations(spark):
     """Seeded fuzz: well-formed TransferBatch payloads with random
     structural mutations — bit flips anywhere, truncation, extension,
     offset/length word perturbation, topic corruption — must decode
-    identically on both paths (one Spark comparison over 400 rows)."""
+    as the row decoder does (one Spark comparison over 400 rows)."""
     rng = random.Random(0xABCD)
     rows = []
     for i in range(400):
@@ -260,7 +285,7 @@ SIG_MULTI = "Multi(bytes a, uint64 n, string b, uint32[] c)"
 def _enc_blob(payload: bytes, pad: bytes | None = None) -> bytes:
     """Length word + payload right-padded to a word boundary.  ``pad``
     overrides the zero padding (the ABI spec pads with zeros but
-    neither decode path checks pad CONTENT — dirty pads are accepted)."""
+    no decoder checks pad CONTENT — dirty pads are accepted)."""
     npad = (-len(payload)) % 32
     return _w(len(payload)) + payload + (pad or bytes(npad))[:npad]
 
@@ -274,6 +299,10 @@ def test_blob_vectorized_simple_string(spark):
         (3, _w(9), None, None, blob(b"\xff\xfe invalid utf8")),
         (4, _w(9), None, None, blob(b"x" * 32)),  # exact word, no pad
         (5, _w(9), None, None, blob(b"pad", pad=b"\xde\xad\xbe\xef" * 8)),
+        (6, _w(9), None, None, blob(b"a\xc0\xafb")),  # overlong '/'
+        (7, _w(9), None, None, blob(b"\xf4\x90\x80\x80")),  # above U+10FFFF
+        (8, _w(9), None, None, blob(b"x\xe2\x82")),  # truncated sequence
+        (9, _w(9), None, None, blob("\x00\ufeff".encode())),  # NUL, BOM: valid
     ]
     out = _assert_paths_agree(spark, rows, SIG_URI)
     by_idx = {r["log_index"]: r for r in out}
@@ -282,8 +311,11 @@ def test_blob_vectorized_simple_string(spark):
     assert by_idx[2]["value"] == ""
     assert by_idx[3]["value"] is None  # invalid utf-8 -> row NULL
     assert by_idx[4]["value"] == "x" * 32
-    # dirty pad bytes are accepted (neither path checks pad content)
+    # dirty pad bytes are accepted (no decoder checks pad content)
     assert by_idx[5]["value"] == "pad"
+    for i in (6, 7, 8):
+        assert by_idx[i]["value"] is None, f"row {i}"
+    assert by_idx[9]["value"] == "\x00\ufeff"
     assert by_idx[0]["id"] == 9
 
 
@@ -329,6 +361,14 @@ def test_blob_vectorized_adversarial(spark):
         (7, None, None, None,
          _w(32 * 4) + _w(7) + _w(32 * 5) + _w(32 * 6)
          + _enc_blob(b"") + _enc_blob(b"") + _enc_uint_arr([])),
+        # 8: blob length word >= 2^63
+        (8, None, None, None,
+         _w(32 * 4) + _w(7) + _w(32 * 5) + _w(32 * 6)
+         + _w(2**63) + _enc_blob(b"") + _enc_uint_arr([])),
+        # 9: blob length 2^64 - 31, whose padded size wraps 64 bits to 0
+        (9, None, None, None,
+         _w(32 * 4) + _w(7) + _w(32 * 5) + _w(32 * 6)
+         + _w(2**64 - 31) + _enc_blob(b"") + _enc_uint_arr([])),
     ]
     out = _assert_paths_agree(spark, rows, SIG_MULTI)
     by_idx = {r["log_index"]: r for r in out}
@@ -336,7 +376,7 @@ def test_blob_vectorized_adversarial(spark):
     assert by_idx[0]["b"] == "str"
     assert by_idx[0]["c"] == [1, 2]
     assert by_idx[0]["n"] == 7
-    for i in (1, 2, 3, 4, 5, 6):
+    for i in (1, 2, 3, 4, 5, 6, 8, 9):
         assert by_idx[i]["a"] is None, f"row {i}"
         assert by_idx[i]["b"] is None, f"row {i}"
     assert by_idx[7]["a"] == bytearray(b"")
@@ -347,7 +387,7 @@ def test_blob_vectorized_adversarial(spark):
 def test_blob_vectorized_fuzz_mutations(spark):
     """Seeded fuzz over the mixed blob+array signature: random payload
     sizes (incl. word-boundary straddlers and multi-word blobs) with
-    structural mutations — both decode paths must agree row-for-row."""
+    structural mutations — the SQL decode must match the row decoder."""
     rng = random.Random(0x517)
     rows = []
     for i in range(400):
@@ -401,9 +441,9 @@ def _w_signed(v: int) -> bytes:
 
 def test_typed_array_elements_vectorized(spark):
     """address[] / bool[] / intN[] / bytesN[] tails: the generic
-    element decoder must match the per-row path — including dirty
+    element decode must match the row decoder — including dirty
     address padding (row fail), dirty int padding (a non-sign-extended
-    intN word is an invalid encoding → row fail, NOT an Arrow crash),
+    intN word is an invalid encoding → row fail, not a wrong long),
     and ±(10^38-1) wide-int element NULLs."""
     addr = lambda i: bytes(12) + bytes([i]) * 20
     own = [addr(1), addr(2)]
@@ -427,7 +467,7 @@ def test_typed_array_elements_vectorized(spark):
         + own_dirty + t_flg + t_dlt + t_wid + t_sel
     )
     # non-sign-extended int32 element (full-word value 2^40): dirty int
-    # padding -> row fails on BOTH paths
+    # padding -> row fails
     t_dlt_big = _w(2) + _w(2**40) + _w_signed(-1)
     ok2 = (
         _w(o[0]) + _w(o[1]) + _w_signed(-7) + _w(o[2]) + _w(o[3]) + _w(o[4])
@@ -504,7 +544,7 @@ def test_random_signature_differential(spark):
     """Seeded sweep over RANDOM signatures (mixed static/indexed params
     with T[] arrays of every base, bytes, string): well-formed payloads
     built by the property suite's independent encoder, plus mutated
-    variants — the vectorized and per-row paths must agree on every
+    variants — the SQL decode and the row decoder must agree on every
     signature, not just the hand-picked ones above."""
     from tests.test_abi_property import (
         _DYN_BASES,

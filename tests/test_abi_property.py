@@ -190,10 +190,10 @@ def test_differential_vs_eth_abi(ev):
 # Dynamic-type roundtrips: random signatures mixing static params with
 # T[] arrays (every supported base), bytes, and string; values encoded
 # canonically (tight in-order tails) by an independent test-side
-# writer; decoded by decode_event_row.  The row path is the pinned
-# reference the vectorized mapper is differentially tested against
+# writer; decoded by decode_event_row.  The row decoder is the reference
+# the Spark SQL decode is differentially tested against
 # (tests/test_abi_dyn_vectorized.py), so value-correctness proven here
-# transfers to both paths.
+# transfers to both.
 # --------------------------------------------------------------------
 
 _DYN_BASES = ("uint8", "uint32", "uint64", "uint256", "int32", "int64",
@@ -376,15 +376,6 @@ def _static_rows(rng, sig, n: int):
     return rows
 
 
-def _static_expect(sig, topics, data):
-    """decode_event_row under the static topic rule: every topic past
-    the indexed ones must be NULL (the row decoder checks the first)."""
-    n_idx = sum(p.indexed for p in sig.params)
-    if any(t is not None for t in topics[n_idx:]):
-        return None
-    return abi.decode_event_row(sig, [None, *topics], data)
-
-
 @_pytest.mark.parametrize("allow", [True, False], ids=["allow_fail", "strict"])
 def test_static_sql_decode_matches_row_decoder(spark, allow):
     """The Spark decode of an all-static signature (SQL expressions)
@@ -408,7 +399,7 @@ def test_static_sql_decode_matches_row_decoder(spark, allow):
         }
         n_ok = 0
         for row_id, t1, t2, t3, data in rows:
-            want = _static_expect(sig, [t1, t2, t3], data)
+            want = abi.decode_event_row(sig, [None, t1, t2, t3], data)
             n_ok += want is not None
             if want is None:
                 if allow:

@@ -85,18 +85,13 @@ def test_text_ops_stay_jvm_side(spark, sf_dir, queries):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 
-def test_decoders_are_arrow_batched(spark, sf_dir, queries):
-    # fixed-width decodes (static ABI, fixed borsh) are Catalyst
-    # expressions: no Python node at all
-    for name in ("evm_decode", "borsh_decode"):
+def test_decoders_hold_no_python_node(spark, sf_dir, queries):
+    # every ABI decode (static and dynamic signatures) and the fixed
+    # borsh decode are Catalyst expressions: no Python node at all
+    for name in ("evm_decode", "evm_decode_batch", "evm_decode_overflow", "borsh_decode"):
         plan = plan_of(queries[name](spark, sf_dir))
         for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, (name, node)
-    # a dynamic ABI signature decodes through one mapInPandas (Arrow),
-    # never row-at-a-time
-    plan = plan_of(queries["evm_decode_batch"](spark, sf_dir))
-    assert plan.count("MapInPandas (") == 1, plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_stratified_sample_is_map_only(spark, sf_dir, queries):
